@@ -13,10 +13,12 @@ quadratic candidate space into an equi-join on bucket ids.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import hashlib
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import md5_long
+EMBED_DIM = 64
 
 
 def as_double(vec: Column) -> Column:
@@ -45,24 +47,49 @@ SQL_COSINE = (
 )
 
 
-def hyperplane(plane_idx: int, dim: int) -> Column:
-    """Deterministic pseudo-random hyperplane for sign-LSH: weight for each
-    dimension d is derived from md5(plane '_' d), mapped to [-1, 1].
+# Sign-LSH hyperplanes: weight (p, d) = (md5_long(p || '_' || d) % 2001 - 1000)
+# / 1000, computed here driver-side and replayed by the DuckDB oracles with
+# SQL_PLANE. The two forms are bit-identical (positive int hex prefix, same
+# %/cast semantics).
+SQL_PLANE = (
+    "list_transform(range(0, {dim}), d -> "
+    "CAST(CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)), 1, 15)) AS BIGINT) "
+    "% 2001 - 1000 AS DOUBLE) / 1000.0)"
+).format(dim=EMBED_DIM)
 
-    The weights are constants, so they are computed DRIVER-SIDE and
-    embedded as a literal array: the previous HOF form
-    (transform(sequence(...), d -> md5(...))) is not constant-folded by
-    Catalyst — it re-derived all dim weights from md5 PER ROW, which at
-    96 planes × 64 dims was ~6k md5 calls per vector (measured 14.8 s →
-    1.3 s for the sf0.1 band table). The Python arithmetic below is
-    bit-identical to the SQL form (verified: positive int hex-prefix,
-    same %/cast semantics), and the DuckDB oracle still regenerates the
-    same weights from the md5 formula, so cross-engine parity is
-    unchanged."""
-    import hashlib
 
-    weights = []
-    for d in range(dim):
-        h = hashlib.md5(f"{plane_idx}_{d}".encode()).hexdigest()
-        weights.append((int(h[:15], 16) % 2001 - 1000) / 1000.0)
-    return F.array(*[F.lit(w) for w in weights])
+def plane_weights(n_planes: int) -> list[list[float]]:
+    """Weights of hyperplanes 0..n_planes-1, EMBED_DIM each."""
+    return [
+        [(int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[:15], 16) % 2001
+          - 1000) / 1000.0 for d in range(EMBED_DIM)]
+        for p in range(n_planes)
+    ]
+
+
+def _sql_literal(x) -> str:
+    return (f"array({', '.join(map(_sql_literal, x))})" if isinstance(x, list)
+            else f"{x!r}D")
+
+
+def band_signatures(e: DataFrame, n_bands: int, band_bits: int) -> DataFrame:
+    """(vec_id, band, sig) sign-LSH band table of e(vec_id, v DOUBLE[]).
+
+    Band b's signature packs the sign bits of planes b*band_bits + i as
+    bit i, the packing the oracles replay with SQL_PLANE. The plane matrix
+    is ONE constant literal parsed from SQL text (repr(float) round-trips
+    exactly), and every signature comes from one transform/aggregate over
+    it, so a geometry costs the builder a few Py4J calls instead of a
+    literal node per weight. The weights are computed driver-side, never
+    per row: deriving them from md5 inside the plan is not constant-folded
+    and cost 14.8 s against 1.3 s for the sf0.1 band table."""
+    w = plane_weights(n_bands * band_bits)
+    # each band's planes listed high bit first: the fold acc*2 + bit then
+    # leaves plane b*band_bits + i at 1 << i
+    planes = F.expr(_sql_literal(
+        [w[b * band_bits:(b + 1) * band_bits][::-1] for b in range(n_bands)]))
+    sigs = F.transform(planes, lambda band: F.aggregate(
+        band, F.lit(0),
+        lambda acc, p: acc * 2 + F.when(dot(F.col("v"), p) >= 0, 1)
+        .otherwise(0)))
+    return e.select("vec_id", F.posexplode(sigs).alias("band", "sig"))

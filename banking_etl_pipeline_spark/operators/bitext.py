@@ -53,10 +53,11 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.numeric import ftrunc, sql_ftrunc
+from ..functions.vectors import SQL_PLANE
 from ..session import session_persist
 from ..spec import QuerySpec
 from .dedup import DEDUP_MAX_BAND_BITS, DEDUP_TARGET_BUCKET
-from .similarity import _SQL_PLANE, BAND_BITS, N_BANDS
+from .similarity import BAND_BITS, N_BANDS
 
 SRC_LANG = "en"
 K_MARGIN = 4     # neighborhood size for the margin normalizer
@@ -74,10 +75,10 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf3). Same derivation as dedup_embedding_cosine (`dedup_band_bits`:
     smallest bb with 2^bb·32 ≥ N, integer search mirrored in the oracle's
     params CTE), and the band table is the SAME session-persisted
-    `_bands_for` materialization the dedup detector rides, so the two
-    families share one signature index per session. At ≤2048 vectors this
-    resolves to the historical bb=6 — identical candidates, identical
-    output."""
+    `similarity.lsh_bands` materialization the dedup detector rides, so
+    the two families share one signature index per session. At ≤2048
+    vectors this resolves to the historical bb=6 — identical candidates,
+    identical output."""
     from .dedup import pair_cos_cached
 
     # r10 (r9 VERDICT item 2): the candidate+verify stage is the SHARED
@@ -240,7 +241,7 @@ params AS (  -- corpus-derived band width, same integer search as
   ), {DEDUP_MAX_BAND_BITS}) AS bb
 ),
 planes AS MATERIALIZED (
-  SELECT p, {_SQL_PLANE} AS pv
+  SELECT p, {SQL_PLANE} AS pv
   FROM range({N_BANDS * DEDUP_MAX_BAND_BITS}) t(p)
   WHERE p < {N_BANDS} * (SELECT bb FROM params)
 ),

@@ -279,13 +279,15 @@ FROM b GROUP BY lang, source
 # ---------------------------------------------------------------------------
 
 
-def _edge_graph(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(doc_a, doc_b) pair list → (verts, adj) with self-loops, persisted.
+def _edge_graph(pairs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(doc_a, doc_b) pair list → (sym, verts, adj): the symmetric edge
+    list, its vertices, and the adjacency with self-loops. sym and adj are
+    persisted; a caller that truncates lineage releases both.
 
-    The symmetric edge list is persisted: every downstream consumer (verts,
-    adj, each propagation round) re-derives the expensive LSH pair stage
-    otherwise — this persist is the edge-list materialization a cluster job
-    would also do once."""
+    The symmetric edge list is persisted because every downstream consumer
+    (verts, adj, each propagation round) re-derives the expensive LSH pair
+    stage otherwise — this persist is the edge-list materialization a
+    cluster job would also do once."""
     sym = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
@@ -297,7 +299,7 @@ def _edge_graph(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
     adj = sym.unionByName(
         verts.select(F.col("v").alias("src"), F.col("v").alias("dst"))
     ).persist()
-    return verts, adj
+    return sym, verts, adj
 
 
 def _propagation_round(adj: DataFrame, labels: DataFrame) -> DataFrame:
@@ -321,7 +323,7 @@ def propagate_min_labels(
     (columns doc_a, doc_b) → (v, label) with label = min vertex id within
     `iterations` hops. The bounded-hop primitive; `propagate_to_fixpoint`
     is the converged connected-components driver `dup_clusters` uses."""
-    verts, adj = _edge_graph(pairs)
+    _, verts, adj = _edge_graph(pairs)
     labels = verts.select("v", F.col("v").alias("label"))
     for _ in range(iterations):
         labels = _propagation_round(adj, labels)
@@ -349,7 +351,7 @@ def propagate_to_fixpoint(
     Rounds needed = graph diameter (min labels travel one hop per round);
     `max_iterations` is a runaway backstop, not a semantic bound. At
     fixpoint label(v) = min vertex id of v's connected component."""
-    verts, adj = _edge_graph(pairs)
+    sym, verts, adj = _edge_graph(pairs)
     labels = verts.select("v", F.col("v").alias("label")).localCheckpoint()
     prev_sum = (labels.agg(F.sum("label").alias("s")).collect()[0]["s"]) or 0
     for _ in range(max_iterations):
@@ -358,6 +360,10 @@ def propagate_to_fixpoint(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    # the final labels are checkpointed: their lineage no longer reads the
+    # edge relations, so release them rather than pin them per invocation
+    adj.unpersist()
+    sym.unpersist()
     return labels
 
 

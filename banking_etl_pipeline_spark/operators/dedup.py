@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.hashing import md5_long, sql_md5_long
-from ..functions.vectors import as_double, dot
+from ..functions.vectors import SQL_PLANE, dot
 from ..session import default_parallelism, session_persist
 from ..spec import QuerySpec
 
@@ -159,12 +159,17 @@ def shingle_pair_commons(spark: SparkSession, sf_dir: str,
     capped run can only under-report `common` for docs sharing ultra-hot
     shingles, never inflate it.
     """
-    exploded = _exploded_shingles(
-        table(spark, sf_dir, "documents")
-        .filter(F.size(F.split(F.col("text"), " ")) >= 3)
-        .repartition(default_parallelism())
-        .select("doc_id", "text")
-    ).persist()  # consumed 3× below (sizes + both sides of the self-join)
+    # consumed 3× below (sizes + both sides of the self-join); persisted
+    # once per session — it does not depend on max_doc_freq
+    exploded = session_persist(
+        spark, f"shingles:{sf_dir}",
+        lambda: _exploded_shingles(
+            table(spark, sf_dir, "documents")
+            .filter(F.size(F.split(F.col("text"), " ")) >= 3)
+            .repartition(default_parallelism())
+            .select("doc_id", "text")
+        ),
+    )
     sizes = exploded.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     if max_doc_freq is not None:
         rare = (
@@ -523,20 +528,20 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its DuckDB oracle replay, so the candidate set (and therefore every
     consumer's output) is deterministic and oracle-checked end-to-end. Band
     width is corpus-derived (`dedup_band_bits`, r7: the r6-measured
-    quadratic cliff fix) so the candidate budget stays linear in N; at the
-    base geometry the band table delegates to the shared
-    `similarity.lsh_bands_cached` materialization. Each surviving candidate
+    quadratic cliff fix) so the candidate budget stays linear in N; the
+    band table is the shared `similarity.lsh_bands` materialization, so at
+    the base geometry it is the one ann_lsh reads. Each surviving candidate
     pays one exact cosine; recall is probabilistic per banding theory while
     precision is exact."""
-    from .lshscale import _bands_for
     from .similarity import N_BANDS as EMB_BANDS
+    from .similarity import embedding_corpus, lsh_bands
     from ..session import session_scalar
 
     n = session_scalar(
         spark, f"embeddings_count:{sf_dir}",
         lambda: table(spark, sf_dir, "embeddings").count(),
     )
-    bands = _bands_for(spark, sf_dir, EMB_BANDS, dedup_band_bits(n))
+    bands = lsh_bands(spark, sf_dir, EMB_BANDS, dedup_band_bits(n))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -554,11 +559,7 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector payload feeding straight into the verify join's own exchange /
     # broadcast — scan fan-out is the session's openCostInBytes job, not a
     # per-query repartition (guide §2.4: remove shuffles outright)
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", as_double(F.col("embedding")).alias("v"))
-        .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    )
+    e = embedding_corpus(spark, sf_dir)
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
                   F.col("nrm").alias("na"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
@@ -574,7 +575,7 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pair_cos_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-persisted `_pair_cos` — the write-the-verify-stage-once step
     of a real pipeline (same lifecycle/justification as
-    `similarity.lsh_bands_cached`, one tier further: the detector and the
+    `similarity.lsh_bands`, one tier further: the detector and the
     bitext miner both read the verified candidate cosines)."""
     return session_persist(
         spark, f"dedup_pair_cos:{sf_dir}", lambda: _pair_cos(spark, sf_dir)
@@ -601,7 +602,7 @@ def _dedup_embedding_cosine_sql() -> str:
     # threshold boundaries are bit-exact cross-engine). `e` and `sigs` are
     # consumed more than once -> MATERIALIZED (the sf1 CTE-re-execution
     # lesson from triangle_count, SCALE.md).
-    from .similarity import BAND_BITS, N_BANDS, _SQL_PLANE
+    from .similarity import BAND_BITS, N_BANDS
 
     return f"""
 WITH e AS MATERIALIZED (
@@ -617,7 +618,7 @@ params AS (
   ), {DEDUP_MAX_BAND_BITS}) AS bb
 ),
 planes AS MATERIALIZED (
-  SELECT p, {_SQL_PLANE} AS pv
+  SELECT p, {SQL_PLANE} AS pv
   FROM range({N_BANDS * DEDUP_MAX_BAND_BITS}) t(p)
   WHERE p < {N_BANDS} * (SELECT bb FROM params)
 ),

@@ -36,10 +36,11 @@ oracles, which are |probes|×N and have no quadratic path:
   near-identical pairs at ~1/40th the candidate budget of the base
   geometry. tests/test_lshscale_deferred.py plants dups to prove it.
 
-Scale: per-geometry signatures are linear scans (hyperplane weights
-precomputed driver-side as literal arrays — the constant-folding lesson
-in SCALE.md), candidates come from banded equi-joins only, the probe
-truth is |probes|×N not N², and every report is a bounded aggregate.
+Scale: per-geometry signatures are linear scans (the shared
+`similarity.lsh_bands` table: one constant plane-matrix literal per
+geometry — the constant-folding lesson in SCALE.md), candidates come
+from banded equi-joins only, the probe truth is |probes|×N not N², and
+every report is a bounded aggregate.
 """
 
 from __future__ import annotations
@@ -48,11 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.vectors import as_double, dot, hyperplane
+from ..functions.vectors import SQL_PLANE, dot
 from ..session import session_persist
 from ..spec import QuerySpec
+from .similarity import embedding_corpus, lsh_bands
 
-EMBED_DIM = 64
 # geometries under study: the registered base (16, 6) plus three
 # progressively finer bandings; planes are the SAME md5-derived family the
 # base pipeline uses (functions/vectors.py), indexed 0..n_bands*band_bits-1
@@ -63,69 +64,16 @@ PROBE_IDS = 100              # vec_id < 100 anchor the recall measurement
 BASE_THRESHOLD = 0.35        # operators/dedup.py COSINE_DUP_THRESHOLD
 
 
-def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    return e.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-
-
-def _bands_for(spark: SparkSession, sf_dir: str,
-               n_bands: int, band_bits: int) -> DataFrame:
-    """(vec_id, band, sig) for one geometry; session-persisted per
-    (sf_dir, geometry) — the paramscan, recall, scaled-dedup, and (r7)
-    base-dedup consumers share one materialization. The base (16, 6)
-    geometry delegates to `similarity.lsh_bands_cached` — the identical
-    relation by construction (same hyperplane family, same packing) — so
-    a session never holds two persisted copies of it (ADVICE r6)."""
-    from .similarity import BAND_BITS as BASE_BITS
-    from .similarity import N_BANDS as BASE_BANDS
-    from .similarity import lsh_bands_cached
-
-    if (n_bands, band_bits) == (BASE_BANDS, BASE_BITS):
-        return lsh_bands_cached(spark, sf_dir)
-
-    def build() -> DataFrame:
-        e = _corpus(spark, sf_dir)
-        sigs = []
-        for band in range(n_bands):
-            sig = F.lit(0)
-            for i in range(band_bits):
-                p = band * band_bits + i
-                sig = sig + F.when(
-                    dot(F.col("v"), hyperplane(p, EMBED_DIM)) >= 0,
-                    F.lit(1 << i),
-                ).otherwise(F.lit(0))
-            sigs.append(F.struct(
-                F.lit(band).alias("band"), sig.cast("int").alias("sig")))
-        return (
-            e.withColumn("bs", F.explode(F.array(*sigs)))
-            .select("vec_id", F.col("bs.band").alias("band"),
-                    F.col("bs.sig").alias("sig"))
-        )
-
-    return session_persist(
-        spark, f"lshscale:{sf_dir}:{n_bands}x{band_bits}", build)
-
-
-_SQL_PLANE = (
-    "list_transform(range(0, {dim}), d -> "
-    "CAST(CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || '_' || "
-    "CAST(d AS VARCHAR)), 1, 15)) AS BIGINT) "
-    "% 2001 - 1000 AS DOUBLE) / 1000.0)"
-).format(dim=EMBED_DIM)
-
-
 def _sql_sigs(n_bands: int, band_bits: int, rel: str = "e") -> str:
     """sigs relation for one geometry (same md5 plane family, same
-    band = p div bits / bit = 1 << (p mod bits) packing as _bands_for)."""
+    band = p div bits / bit = 1 << (p mod bits) packing as lsh_bands)."""
     return f"""(
   SELECT vec_id, band, CAST(SUM(bit) AS INTEGER) AS sig FROM (
     SELECT {rel}.vec_id, CAST(p // {band_bits} AS INTEGER) AS band,
            CASE WHEN list_dot_product({rel}.v, pl.pv) >= 0
                 THEN 1 << CAST(p % {band_bits} AS INTEGER) ELSE 0 END AS bit
     FROM {rel} CROSS JOIN (
-      SELECT p, {_SQL_PLANE} AS pv
+      SELECT p, {SQL_PLANE} AS pv
       FROM range({n_bands * band_bits}) t(p)
     ) pl
   ) GROUP BY vec_id, band
@@ -136,7 +84,7 @@ def lsh_paramscan_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for n_bands, band_bits in CONFIGS:
         buckets = (
-            _bands_for(spark, sf_dir, n_bands, band_bits)
+            lsh_bands(spark, sf_dir, n_bands, band_bits)
             .groupBy("band", "sig")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
@@ -184,7 +132,7 @@ def _true_probe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.ann_brute_force)."""
 
     def build() -> DataFrame:
-        e = _corpus(spark, sf_dir)
+        e = embedding_corpus(spark, sf_dir)
         probes = e.filter(F.col("vec_id") < PROBE_IDS).select(
             F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
             F.col("nrm").alias("na"),
@@ -215,7 +163,7 @@ def lsh_recall_tradeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_true = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
     parts = []
     for n_bands, band_bits in CONFIGS:
-        bands = _bands_for(spark, sf_dir, n_bands, band_bits)
+        bands = lsh_bands(spark, sf_dir, n_bands, band_bits)
         pb = bands.filter(F.col("vec_id") < PROBE_IDS).select(
             F.col("vec_id").alias("vec_a"),
             F.col("band").alias("aband"),
@@ -348,7 +296,7 @@ def dedup_embedding_cosine_scaled(spark: SparkSession,
         spark, f"embeddings_count:{sf_dir}",
         lambda: table(spark, sf_dir, "embeddings").count(),
     )
-    bands = _bands_for(spark, sf_dir, SCALED_BANDS, scaled_band_bits(n))
+    bands = lsh_bands(spark, sf_dir, SCALED_BANDS, scaled_band_bits(n))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -361,7 +309,7 @@ def dedup_embedding_cosine_scaled(spark: SparkSession,
                 F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    e = _corpus(spark, sf_dir)
+    e = embedding_corpus(spark, sf_dir)
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
                   F.col("nrm").alias("na"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
@@ -397,7 +345,7 @@ params AS (
   ), {DEDUP_MAX_BAND_BITS}) AS bb
 ),
 planes AS MATERIALIZED (
-  SELECT p, {_SQL_PLANE} AS pv
+  SELECT p, {SQL_PLANE} AS pv
   FROM range({SCALED_BANDS * DEDUP_MAX_BAND_BITS}) t(p)
   WHERE p < {SCALED_BANDS} * (SELECT bb FROM params)
 ),

@@ -271,9 +271,9 @@ FROM buckets
 
 
 def lsh_candidate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import lsh_bands_cached
+    from .similarity import BAND_BITS, N_BANDS, lsh_bands
 
-    bands = lsh_bands_cached(spark, sf_dir)
+    bands = lsh_bands(spark, sf_dir, N_BANDS, BAND_BITS)
     buckets = bands.groupBy("band", "sig").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -291,14 +291,15 @@ def lsh_candidate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_candidate_report_sql() -> str:
     # the exact sigs pipeline the ANN/dedup oracles replay (similarity.py)
-    from .similarity import BAND_BITS, N_BANDS, _SQL_PLANE
+    from ..functions.vectors import SQL_PLANE
+    from .similarity import BAND_BITS, N_BANDS
 
     return f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
 planes AS (
-  SELECT p, {_SQL_PLANE} AS pv FROM range({N_BANDS * BAND_BITS}) t(p)
+  SELECT p, {SQL_PLANE} AS pv FROM range({N_BANDS * BAND_BITS}) t(p)
 ),
 bits AS (
   SELECT e.vec_id, CAST(p // {BAND_BITS} AS INTEGER) AS band,

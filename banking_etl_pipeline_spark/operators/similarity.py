@@ -29,7 +29,9 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..session import session_persist, session_scalar
 from ..functions.numeric import ftrunc, sql_ftrunc
-from ..functions.vectors import as_double, dot, hyperplane, norm
+from ..functions.vectors import (
+    EMBED_DIM, SQL_PLANE, as_double, band_signatures, dot, norm,
+)
 from ..spec import QuerySpec
 
 N_QUERIES = 10  # vectors with vec_id < 10 serve as the query set
@@ -39,10 +41,10 @@ TOP_K = 5
 # 16 bands × 6 bits gives ~0.5 expected recall at ~0.2 candidate rate.
 N_BANDS = 16
 BAND_BITS = 6
-EMBED_DIM = 64
 
 
-def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, nrm): every embedding as a DOUBLE[] with its L2 norm."""
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -50,7 +52,7 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _corpus(spark, sf_dir)
+    e = embedding_corpus(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -89,39 +91,18 @@ WHERE rank <= {TOP_K}
 """
 
 
-def lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per (vector, band): deterministic sign-LSH band signatures.
-
-    Band b's signature packs BAND_BITS sign bits (hyperplanes
-    b*BAND_BITS .. b*BAND_BITS+BAND_BITS-1) into an int."""
-    e = _corpus(spark, sf_dir)
-    sigs = []
-    for band in range(N_BANDS):
-        sig = F.lit(0)
-        for i in range(BAND_BITS):
-            p = band * BAND_BITS + i
-            sig = sig + F.when(
-                dot(F.col("v"), hyperplane(p, EMBED_DIM)) >= 0, F.lit(1 << i)
-            ).otherwise(F.lit(0))
-        sigs.append(F.struct(F.lit(band).alias("band"), sig.cast("int").alias("sig")))
-    # Only (vec_id, band, sig) — never duplicate the vector N_BANDS times;
-    # re-rank joins vectors back by id.
-    return (
-        e.withColumn("bs", F.explode(F.array(*sigs)))
-        .select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-    )
-
-
-# Session-scoped cache of the band-signature table (same pattern/rationale
-# as dedup._LSH_CACHE): the 96 hyperplane dot products per vector are
-# higher-order-function folds — interpreted per element, the most expensive
-# expression in the module — and every consumer (both sides of ann_lsh's
-# candidate join, dedup_embedding_cosine, ann_recall_report) would otherwise
-# recompute them per action. One materialization per (session, sf_dir) ≙ the
-# persisted signature index a cluster deployment maintains.
-def lsh_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Session-persisted band table, one per (sf_dir, geometry): every consumer
+# (both sides of ann_lsh's candidate join, the dedup/bitext verify stage,
+# the lshscale study, retrieval, the planner's bucket report) reads one
+# materialization instead of recomputing n_bands*band_bits dot products per
+# vector per action — the persisted signature index a cluster deployment
+# maintains.
+def lsh_bands(spark: SparkSession, sf_dir: str,
+              n_bands: int, band_bits: int) -> DataFrame:
     return session_persist(
-        spark, f"lsh_bands:{sf_dir}", lambda: lsh_bands(spark, sf_dir)
+        spark, f"lsh_bands:{sf_dir}:{n_bands}x{band_bits}",
+        lambda: band_signatures(
+            embedding_corpus(spark, sf_dir), n_bands, band_bits),
     )
 
 
@@ -130,7 +111,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     then exact cosine re-rank over the deduplicated candidate set. Recall is
     probabilistic by design (tests assert recall ≥ threshold vs brute
     force), but the operator itself is deterministic and oracle-checked."""
-    bands = lsh_bands_cached(spark, sf_dir)
+    bands = lsh_bands(spark, sf_dir, N_BANDS, BAND_BITS)
     qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("band").alias("qband"),
@@ -149,7 +130,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
         .distinct()
     )
-    e = _corpus(spark, sf_dir)
+    e = embedding_corpus(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -168,15 +149,8 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # DuckDB replica of the whole LSH pipeline: the hyperplanes are md5-derived
-# (functions/vectors.py:hyperplane), so the oracle regenerates them from the
-# same formula — weight(p, d) = (md5_long(p || '_' || d) % 2001 - 1000)/1000 —
-# and reproduces signatures, candidate set, and re-rank exactly.
-_SQL_PLANE = (
-    "list_transform(range(0, {dim}), d -> "
-    "CAST(CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)), 1, 15)) AS BIGINT) "
-    "% 2001 - 1000 AS DOUBLE) / 1000.0)"
-).format(dim=EMBED_DIM)
-
+# (functions/vectors.py), so the oracle regenerates them with SQL_PLANE and
+# reproduces signatures, candidate set, and re-rank exactly.
 ANN_LSH_SQL = f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -184,7 +158,7 @@ WITH e AS (
   FROM embeddings
 ),
 planes AS (
-  SELECT p, {_SQL_PLANE} AS pv FROM range({N_BANDS * BAND_BITS}) t(p)
+  SELECT p, {SQL_PLANE} AS pv FROM range({N_BANDS * BAND_BITS}) t(p)
 ),
 bits AS (
   SELECT e.vec_id, CAST(p // {BAND_BITS} AS INTEGER) AS band,
@@ -267,7 +241,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration) and the cell assignment is the partitioning key, so each
     query's probe touches NPROBE/N_CELLS of the corpus.
     """
-    e = _corpus(spark, sf_dir)
+    e = embedding_corpus(spark, sf_dir)
     centroids = (
         e.filter(F.col("vec_id").between(N_QUERIES, N_QUERIES + N_CELLS - 1))
         .select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"),
@@ -439,7 +413,8 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, so the shuffle carries ≤1 row per vector per map partition.
     Measured on this shape against both the join-back and a
     min(struct(dist, label)) SortAggregate: window 1.19 s vs 1.58 vs
-    4.84 s at sf0.1, scripts/argmin_experiment.py) — and the centroid
+    4.84 s at sf0.1, scripts/argmin_experiment.py, deleted; see git
+    history) — and the centroid
     side is broadcast: the canonical cluster plan where the only full
     shuffle is the per-vector rank-1 window."""
     e = table(spark, sf_dir, "embeddings").select(
@@ -859,7 +834,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a rank window over the anchor×corpus pair stream. At 100 TB the
     corpus side streams; anchors scale by batching (each batch is another
     broadcast)."""
-    e = _corpus(spark, sf_dir)
+    e = embedding_corpus(spark, sf_dir)
     lab = table(spark, sf_dir, "embeddings").select("vec_id", "label")
     ev = e.join(lab, "vec_id")
     anchors = ev.filter(F.col("vec_id") < N_ANCHORS).select(
@@ -1059,7 +1034,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. Complements `dedup_embedding_cosine` (banded LSH pairs): LSH
     answers "which pairs", SemDeDup answers "which copies to train on"
     with bounded per-cell cost."""
-    e = _corpus(spark, sf_dir)
+    e = embedding_corpus(spark, sf_dir)
     n_cells = semdedup_n_cells(session_scalar(
         spark, f"embeddings_count:{sf_dir}",
         lambda: table(spark, sf_dir, "embeddings").count(),

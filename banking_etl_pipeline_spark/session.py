@@ -14,6 +14,7 @@ spark-submit) and `shuffle_partitions` sized to ~2-3× total executor cores.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +65,25 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+# the forms Spark's own boolean / byte-size conf parsers accept (trimmed,
+# case-insensitive), so a bad env value fails here with its name instead of
+# deep inside session start
+_ENV_FORMATS = {
+    "SPARK_GRAFT_AQE_PARALLELISM_FIRST": (
+        re.compile(r"true|false"), "true or false"),
+    "SPARK_GRAFT_ADVISORY_PARTITION": (
+        re.compile(r"\d+(b|kb?|mb?|gb?|tb?|pb?)?"), "a byte size such as 64m"),
+}
+
+
+def _env_conf(name: str, default: str) -> str:
+    value = os.environ.get(name, default)
+    pattern, expected = _ENV_FORMATS[name]
+    if not pattern.fullmatch(value.strip().lower()):
+        raise ValueError(f"{name}={value!r}: expected {expected}")
+    return value
+
+
 def get_spark(
     app_name: str = "banking_etl_pipeline_spark",
     master: str | None = None,
@@ -100,9 +120,9 @@ def get_spark(
         # partitions); deployments set SPARK_GRAFT_AQE_PARALLELISM_FIRST=
         # false and size SPARK_GRAFT_ADVISORY_PARTITION there.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+                _env_conf("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
+                _env_conf("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

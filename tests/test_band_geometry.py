@@ -142,12 +142,14 @@ def wide_corpus_dir(spark, sf_dir, tmp_path_factory):
 
 
 def test_detector_widens_geometry_past_boundary(spark, wide_corpus_dir):
-    from banking_etl_pipeline_spark.operators.lshscale import _bands_for
-    from banking_etl_pipeline_spark.operators.similarity import N_BANDS
+    from banking_etl_pipeline_spark.operators.similarity import (
+        N_BANDS,
+        lsh_bands,
+    )
 
     n = table(spark, wide_corpus_dir, "embeddings").count()
     assert n > 2048 and dedup_band_bits(n) == 7
-    bands = _bands_for(spark, wide_corpus_dir, N_BANDS, 7)
+    bands = lsh_bands(spark, wide_corpus_dir, N_BANDS, 7)
     # 7-bit signatures actually occupy the wider space
     assert bands.agg({"sig": "max"}).first()[0] >= 64
 
@@ -350,3 +352,36 @@ def test_semdedup_two_level_oracle_parity(spark, twolevel_corpus_dir):
     # group owned zero fine cells vanishing with BOTH engines agreeing, so
     # parity alone can't catch it; the f2c self-map rows guarantee it.
     assert spec.build(spark, twolevel_corpus_dir).count() == n
+
+
+def _geometries_in_use():
+    from banking_etl_pipeline_spark.operators.lshscale import (
+        CONFIGS,
+        SCALED_BANDS,
+        SCALED_BITS,
+    )
+    from banking_etl_pipeline_spark.operators.similarity import (
+        BAND_BITS,
+        N_BANDS,
+    )
+
+    # base ANN/dedup/retrieval geometry, the banding study, the scaled
+    # detector, and the first corpus-derived widening (the wide corpus)
+    return sorted({(N_BANDS, BAND_BITS), *CONFIGS,
+                   (SCALED_BANDS, SCALED_BITS), (N_BANDS, BAND_BITS + 1)})
+
+
+@pytest.mark.parametrize("n_bands,band_bits", _geometries_in_use())
+def test_band_relation_sql_parity(spark, sf_dir, n_bands, band_bits):
+    """The shared band table row-for-row against the oracles' replay of
+    the same md5 planes and packing, at every geometry a consumer reads."""
+    from banking_etl_pipeline_spark.operators.lshscale import _sql_sigs
+    from banking_etl_pipeline_spark.operators.similarity import lsh_bands
+
+    got = sorted(tuple(r) for r in
+                 lsh_bands(spark, sf_dir, n_bands, band_bits).collect())
+    want = sorted(duck_connection(sf_dir).execute(
+        "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+        f" SELECT vec_id, band, sig FROM {_sql_sigs(n_bands, band_bits)} s"
+    ).fetchall())
+    assert got == want

@@ -180,3 +180,26 @@ def test_delta_round_trip_or_pinned_skip(spark, tmp_path):
     write_delta(df, str(tmp_path / "d"), mode="overwrite")
     got = spark.read.format("delta").load(str(tmp_path / "d"))
     assert got.count() == 5
+
+
+# ---------------------------------------------------------------------------
+# session env validation
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("name,bad,good", [
+    ("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "yes", "FALSE"),
+    ("SPARK_GRAFT_ADVISORY_PARTITION", "64 MB", "64MB"),
+    ("SPARK_GRAFT_ADVISORY_PARTITION", "1.5g", "1048576"),
+])
+def test_bad_aqe_env_value_fails_naming_the_variable(monkeypatch, name, bad,
+                                                     good):
+    """A malformed AQE env value fails before it reaches Spark conf, with
+    an error that names the variable; a form Spark accepts still passes."""
+    from banking_etl_pipeline_spark.session import _env_conf, get_spark
+
+    monkeypatch.setenv(name, bad)
+    with pytest.raises(ValueError, match=name):
+        get_spark(app_name="tests")
+    monkeypatch.setenv(name, good)
+    assert _env_conf(name, "") == good

@@ -50,7 +50,7 @@ def test_lshscale_plans_scale_sane(spark, sf_dir, lq):
 def test_paramscan_matches_band_relation(spark, sf_dir, lq):
     """Budgets re-derived from the same per-geometry band relation the
     joins would consume, plus the Σ n(n−1)/2 identity."""
-    from banking_etl_pipeline_spark.operators.lshscale import _bands_for
+    from banking_etl_pipeline_spark.operators.similarity import lsh_bands
 
     rows = {(r["n_bands"], r["band_bits"]): r
             for r in lq["lsh_paramscan_report"].build(spark, sf_dir)
@@ -58,7 +58,7 @@ def test_paramscan_matches_band_relation(spark, sf_dir, lq):
     assert set(rows) == set(CONFIGS)
     for (nb, bb) in CONFIGS:
         sizes: dict = {}
-        for r in _bands_for(spark, sf_dir, nb, bb).collect():
+        for r in lsh_bands(spark, sf_dir, nb, bb).collect():
             k = (r["band"], r["sig"])
             sizes[k] = sizes.get(k, 0) + 1
         r = rows[(nb, bb)]

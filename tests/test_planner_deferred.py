@@ -145,12 +145,13 @@ def test_lsh_candidate_report_matches_bands(spark, sf_dir, pq):
     dedup/ANN joins consume — the report must price exactly the join that
     would run — plus the Σ n(n−1)/2 identity per band."""
     from banking_etl_pipeline_spark.operators.similarity import (
+        BAND_BITS,
         N_BANDS,
-        lsh_bands_cached,
+        lsh_bands,
     )
 
     sizes: dict = {}
-    for r in lsh_bands_cached(spark, sf_dir).collect():
+    for r in lsh_bands(spark, sf_dir, N_BANDS, BAND_BITS).collect():
         sizes.setdefault(r["band"], {}).setdefault(r["sig"], 0)
         sizes[r["band"]][r["sig"]] += 1
     rows = pq["lsh_candidate_report"].build(spark, sf_dir).collect()
