@@ -1,8 +1,4 @@
-"""Cross-lingual bitext mining over `documents` ⋈ `embeddings`
-(REGISTRATION DEFERRED to r4/r5, same policy as operators/reports.py,
-operators/tokenizer.py and operators/privacy.py: the round-2 verdict froze
-net-new registry keys until the driver-verification backlog drains; enable
-by appending this module to `registry._MODULES` once CORRECTNESS_r04 lands).
+"""Cross-lingual bitext mining over `documents` ⋈ `embeddings`.
 
 The margin-based parallel-pair mining recipe from the public CCMatrix /
 LASER line of work: candidate cross-lingual pairs come from approximate
@@ -367,22 +363,21 @@ ORDER BY d.tgt_lang
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "bitext_margin_pairs": QuerySpec(
-            bitext_margin_pairs, BITEXT_MARGIN_PAIRS_SQL,
-            "margin-based cross-lingual pair mining (CCMatrix recipe)",
-        ),
-        "bitext_reciprocal_best": QuerySpec(
-            bitext_reciprocal_best, BITEXT_RECIPROCAL_BEST_SQL,
-            "bidirectional best-match alignment pairs",
-        ),
-        "bitext_mining_report": QuerySpec(
-            bitext_mining_report, BITEXT_MINING_REPORT_SQL,
-            "per-language mining volumes and margin stats",
-        ),
-        "bitext_lang_coverage": QuerySpec(
-            bitext_lang_coverage, BITEXT_LANG_COVERAGE_SQL,
-            "aligned-document coverage per target language",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "bitext_margin_pairs": QuerySpec(
+        bitext_margin_pairs, BITEXT_MARGIN_PAIRS_SQL,
+        "margin-based cross-lingual pair mining (CCMatrix recipe)",
+    ),
+    "bitext_reciprocal_best": QuerySpec(
+        bitext_reciprocal_best, BITEXT_RECIPROCAL_BEST_SQL,
+        "bidirectional best-match alignment pairs",
+    ),
+    "bitext_mining_report": QuerySpec(
+        bitext_mining_report, BITEXT_MINING_REPORT_SQL,
+        "per-language mining volumes and margin stats",
+    ),
+    "bitext_lang_coverage": QuerySpec(
+        bitext_lang_coverage, BITEXT_LANG_COVERAGE_SQL,
+        "aligned-document coverage per target language",
+    ),
+}

@@ -1,7 +1,4 @@
-"""Probability-calibration tier over the weak-label model's scores
-(REGISTRATION DEFERRED — listed in registry._DEFERRED_MODULE_NAMES;
-enable by moving this module's name into the registration loop once a
-driver-verification slot opens; queues for r7 behind the r6 batch).
+"""Probability-calibration tier over the weak-label model's scores.
 
 A label model emits confidences; before anyone thresholds them, a
 calibration audit answers "does conf = 0.8 actually mean 80%?". Ground
@@ -164,21 +161,20 @@ FROM graded
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "calibration_bins": QuerySpec(
-            calibration_bins,
-            CALIBRATION_BINS_SQL,
-            "reliability diagram: per-decile volume, mean conf, accuracy",
-        ),
-        "ece_report": QuerySpec(
-            ece_report,
-            ECE_REPORT_SQL,
-            "expected calibration error as one exact integer ratio",
-        ),
-        "brier_score": QuerySpec(
-            brier_score,
-            BRIER_SCORE_SQL,
-            "Brier score with int64-safe per-row fixed-point squares",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "calibration_bins": QuerySpec(
+        calibration_bins,
+        CALIBRATION_BINS_SQL,
+        "reliability diagram: per-decile volume, mean conf, accuracy",
+    ),
+    "ece_report": QuerySpec(
+        ece_report,
+        ECE_REPORT_SQL,
+        "expected calibration error as one exact integer ratio",
+    ),
+    "brier_score": QuerySpec(
+        brier_score,
+        BRIER_SCORE_SQL,
+        "Brier score with int64-safe per-row fixed-point squares",
+    ),
+}

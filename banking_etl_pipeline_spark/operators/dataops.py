@@ -1,7 +1,4 @@
-"""Dataset-snapshot diff / drift audit tier over `orders` (REGISTRATION
-DEFERRED — listed in registry._DEFERRED_MODULE_NAMES; enable by moving
-this module's name into `registry._MODULES` once a driver-verification
-slot opens).
+"""Dataset-snapshot diff / drift audit tier over `orders`.
 
 The data-ops audit a daily-snapshot pipeline runs before promoting v2
 over v1: which rows appeared, vanished, or changed (and in which
@@ -285,18 +282,17 @@ LIMIT {TOP_CHANGED}
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "dataset_diff": QuerySpec(
-            dataset_diff, DATASET_DIFF_SQL,
-            "v1/v2 snapshot diff: class counts + per-column changes",
-        ),
-        "column_drift_report": QuerySpec(
-            column_drift_report, COLUMN_DRIFT_REPORT_SQL,
-            "per-snapshot null rate and exact mean-cents drift",
-        ),
-        "changed_keys_sample": QuerySpec(
-            changed_keys_sample, CHANGED_KEYS_SAMPLE_SQL,
-            "top-20 changed keys by absolute money delta",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "dataset_diff": QuerySpec(
+        dataset_diff, DATASET_DIFF_SQL,
+        "v1/v2 snapshot diff: class counts + per-column changes",
+    ),
+    "column_drift_report": QuerySpec(
+        column_drift_report, COLUMN_DRIFT_REPORT_SQL,
+        "per-snapshot null rate and exact mean-cents drift",
+    ),
+    "changed_keys_sample": QuerySpec(
+        changed_keys_sample, CHANGED_KEYS_SAMPLE_SQL,
+        "top-20 changed keys by absolute money delta",
+    ),
+}

@@ -1,7 +1,4 @@
-"""Epoch/dataloader planning tier over `documents` (REGISTRATION DEFERRED
-— listed in registry._DEFERRED_MODULE_NAMES; enable by moving this
-module's name into the registration loop once a driver-verification slot
-opens).
+"""Epoch/dataloader planning tier over `documents`.
 
 What a trainer's data-loading control plane computes before/during a run:
 the per-epoch shuffle order (seeded, reproducible, never a materialized
@@ -201,21 +198,20 @@ FROM rem
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "epoch_shuffle_heads": QuerySpec(
-            epoch_shuffle_heads,
-            EPOCH_SHUFFLE_HEADS_SQL,
-            "per-epoch seeded-shuffle heads via TakeOrdered (no global sort)",
-        ),
-        "temperature_mixture": QuerySpec(
-            temperature_mixture,
-            TEMPERATURE_MIXTURE_SQL,
-            "T=0.5 source mixing by exact largest-remainder apportionment",
-        ),
-        "resume_plan": QuerySpec(
-            resume_plan,
-            RESUME_PLAN_SQL,
-            "mid-epoch crash resume point against the shard manifest",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "epoch_shuffle_heads": QuerySpec(
+        epoch_shuffle_heads,
+        EPOCH_SHUFFLE_HEADS_SQL,
+        "per-epoch seeded-shuffle heads via TakeOrdered (no global sort)",
+    ),
+    "temperature_mixture": QuerySpec(
+        temperature_mixture,
+        TEMPERATURE_MIXTURE_SQL,
+        "T=0.5 source mixing by exact largest-remainder apportionment",
+    ),
+    "resume_plan": QuerySpec(
+        resume_plan,
+        RESUME_PLAN_SQL,
+        "mid-epoch crash resume point against the shard manifest",
+    ),
+}

@@ -1,7 +1,4 @@
-"""Feature-engineering tier over `orders` (REGISTRATION DEFERRED —
-listed in registry._DEFERRED_MODULE_NAMES; enable by moving this
-module's name into the registration loop once a driver-verification slot
-opens).
+"""Feature-engineering tier over `orders`.
 
 The tabular-ML preprocessing ops a feature platform runs next to the
 corpus ops: leakage-free target encoding, weight-of-evidence /
@@ -222,21 +219,20 @@ CROSS JOIN n
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "target_encoding_oof": QuerySpec(
-            target_encoding_oof,
-            TARGET_ENCODING_OOF_SQL,
-            "leakage-free out-of-fold mean-target encoding per category",
-        ),
-        "woe_iv_report": QuerySpec(
-            woe_iv_report,
-            WOE_IV_REPORT_SQL,
-            "weight-of-evidence + IV terms for the binary status target",
-        ),
-        "mutual_information": QuerySpec(
-            mutual_information,
-            MUTUAL_INFORMATION_SQL,
-            "per-cell mutual-information terms for priority × status",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "target_encoding_oof": QuerySpec(
+        target_encoding_oof,
+        TARGET_ENCODING_OOF_SQL,
+        "leakage-free out-of-fold mean-target encoding per category",
+    ),
+    "woe_iv_report": QuerySpec(
+        woe_iv_report,
+        WOE_IV_REPORT_SQL,
+        "weight-of-evidence + IV terms for the binary status target",
+    ),
+    "mutual_information": QuerySpec(
+        mutual_information,
+        MUTUAL_INFORMATION_SQL,
+        "per-cell mutual-information terms for priority × status",
+    ),
+}

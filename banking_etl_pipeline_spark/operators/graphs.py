@@ -1,7 +1,4 @@
-"""Bounded-round graph-traversal tier (REGISTRATION DEFERRED — listed in
-registry._DEFERRED_MODULE_NAMES; enable by moving this module's name into
-the registration loop once a driver-verification slot opens; queues for
-r7).
+"""Bounded-round graph-traversal tier.
 
 `corpus.dup_clusters` iterates hash-min label propagation to a FIXPOINT
 (connected components); this tier is the bounded-depth sibling — BFS by
@@ -172,21 +169,20 @@ FROM t, r
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "bfs_layers": QuerySpec(
-            bfs_layers,
-            BFS_LAYERS_SQL,
-            "min-distance BFS layers (≤3 hops) by per-round frontier joins",
-        ),
-        "bfs_frontier_report": QuerySpec(
-            bfs_frontier_report,
-            BFS_FRONTIER_REPORT_SQL,
-            "frontier-growth curve: node count per BFS distance",
-        ),
-        "bfs_reach_report": QuerySpec(
-            bfs_reach_report,
-            BFS_REACH_REPORT_SQL,
-            "k-hop blast radius: total / reached / unreached customers",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "bfs_layers": QuerySpec(
+        bfs_layers,
+        BFS_LAYERS_SQL,
+        "min-distance BFS layers (≤3 hops) by per-round frontier joins",
+    ),
+    "bfs_frontier_report": QuerySpec(
+        bfs_frontier_report,
+        BFS_FRONTIER_REPORT_SQL,
+        "frontier-growth curve: node count per BFS distance",
+    ),
+    "bfs_reach_report": QuerySpec(
+        bfs_reach_report,
+        BFS_REACH_REPORT_SQL,
+        "k-hop blast radius: total / reached / unreached customers",
+    ),
+}

@@ -325,36 +325,35 @@ ORDER BY band
 LSH_CANDIDATE_REPORT_SQL = _lsh_candidate_report_sql()
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "shuffle_partition_plan": QuerySpec(
-            shuffle_partition_plan,
-            SHUFFLE_PARTITION_PLAN_SQL,
-            "per-table scan/shuffle partition counts vs 128 MiB target,"
-            " now and at 1000x",
-        ),
-        "broadcast_plan": QuerySpec(
-            broadcast_plan,
-            BROADCAST_PLAN_SQL,
-            "per-table broadcast-vs-shuffle join-side classification,"
-            " now and at 1000x",
-        ),
-        "salting_plan": QuerySpec(
-            salting_plan,
-            SALTING_PLAN_SQL,
-            "top hot join keys with recommended salt factors"
-            " (partition-chunks spanned)",
-        ),
-        "partition_skew_report": QuerySpec(
-            partition_skew_report,
-            PARTITION_SKEW_REPORT_SQL,
-            "md5-bucket hash-partition load: max/min bucket rows and"
-            " skew per-mille",
-        ),
-        "lsh_candidate_report": QuerySpec(
-            lsh_candidate_report,
-            LSH_CANDIDATE_REPORT_SQL,
-            "per-band LSH bucket stats + exact candidate-pair budget"
-            " (pre-flight for the banded self-join)",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "shuffle_partition_plan": QuerySpec(
+        shuffle_partition_plan,
+        SHUFFLE_PARTITION_PLAN_SQL,
+        "per-table scan/shuffle partition counts vs 128 MiB target,"
+        " now and at 1000x",
+    ),
+    "broadcast_plan": QuerySpec(
+        broadcast_plan,
+        BROADCAST_PLAN_SQL,
+        "per-table broadcast-vs-shuffle join-side classification,"
+        " now and at 1000x",
+    ),
+    "salting_plan": QuerySpec(
+        salting_plan,
+        SALTING_PLAN_SQL,
+        "top hot join keys with recommended salt factors"
+        " (partition-chunks spanned)",
+    ),
+    "partition_skew_report": QuerySpec(
+        partition_skew_report,
+        PARTITION_SKEW_REPORT_SQL,
+        "md5-bucket hash-partition load: max/min bucket rows and"
+        " skew per-mille",
+    ),
+    "lsh_candidate_report": QuerySpec(
+        lsh_candidate_report,
+        LSH_CANDIDATE_REPORT_SQL,
+        "per-band LSH bucket stats + exact candidate-pair budget"
+        " (pre-flight for the banded self-join)",
+    ),
+}

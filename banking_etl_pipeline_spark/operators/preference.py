@@ -1,8 +1,4 @@
-"""Preference-pair (RLHF/DPO) data-prep tier over `documents`
-(REGISTRATION DEFERRED to r4/r5, same policy as the other deferred tiers:
-the round-2 verdict froze net-new registry keys until the
-driver-verification backlog drains; enable by appending this module to
-`registry._MODULES` once CORRECTNESS_r04 lands).
+"""Preference-pair (RLHF/DPO) data-prep tier over `documents`.
 
 The chosen/rejected pair-construction stage of a preference-tuning
 pipeline, with the candidate group (a "prompt"'s completion set) stood in
@@ -229,22 +225,21 @@ ORDER BY source, chosen_id
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "preference_pairs": QuerySpec(
-            preference_pairs, PREFERENCE_PAIRS_SQL,
-            "rank-aligned chosen/rejected pairs per group (DPO prep)",
-        ),
-        "preference_gap_report": QuerySpec(
-            preference_gap_report, PREFERENCE_GAP_REPORT_SQL,
-            "per-group preference-pair volume and gap stats",
-        ),
-        "preference_split": QuerySpec(
-            preference_split, PREFERENCE_SPLIT_SQL,
-            "prompt-level train/val split, zero pair leakage",
-        ),
-        "preference_budget_cap": QuerySpec(
-            preference_budget_cap, PREFERENCE_BUDGET_CAP_SQL,
-            "per-group token-budget cap via window running sum",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "preference_pairs": QuerySpec(
+        preference_pairs, PREFERENCE_PAIRS_SQL,
+        "rank-aligned chosen/rejected pairs per group (DPO prep)",
+    ),
+    "preference_gap_report": QuerySpec(
+        preference_gap_report, PREFERENCE_GAP_REPORT_SQL,
+        "per-group preference-pair volume and gap stats",
+    ),
+    "preference_split": QuerySpec(
+        preference_split, PREFERENCE_SPLIT_SQL,
+        "prompt-level train/val split, zero pair leakage",
+    ),
+    "preference_budget_cap": QuerySpec(
+        preference_budget_cap, PREFERENCE_BUDGET_CAP_SQL,
+        "per-group token-budget cap via window running sum",
+    ),
+}

@@ -1,15 +1,8 @@
-"""Corpus reporting & sketch-tuning tier (REGISTRATION DEFERRED to r4/r5).
+"""Corpus reporting & sketch-tuning tier.
 
 Four operators a corpus team runs before committing to a training mix:
 per-source datasheets, MinHash banding-parameter tuning, the dedup
-aggressiveness curve, and a char-level gibberish signal. All are complete
-(builder + DuckDB oracle + local parity tests in
-tests/test_reports_deferred.py) but NOT yet in the registry: the round-2
-verdict froze net-new query keys until the driver-verification backlog
-drains (VERDICT r2 item 1 — the driver records ~50 keys/round and 99
-backlog keys must green first). Enable by appending this module to
-`registry._MODULES` once CORRECTNESS_r04 lands; the QUERIES dict below is
-already in the registry contract shape.
+aggressiveness curve, and a char-level gibberish signal.
 
 Scale design:
 - source_quality_report: one aggregate over documents + one distinct-doc
@@ -492,22 +485,21 @@ FROM base WHERE n_in_alphabet > 0
 # Registry-contract-shaped dict; NOT imported by registry yet (see module
 # docstring). Oracles are built lazily because the sweep SQL composes
 # private dedup constants.
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "source_quality_report": QuerySpec(
-            source_quality_report, SOURCE_QUALITY_REPORT_SQL,
-            "per-source datasheet: volume, langs, gate, near-dup exposure",
-        ),
-        "minhash_param_sweep": QuerySpec(
-            minhash_param_sweep, _sweep_sql(),
-            "banding-config sweep: precision/recall per (bands, rows)",
-        ),
-        "dedup_threshold_curve": QuerySpec(
-            dedup_threshold_curve, _curve_sql(),
-            "survivor/dropped counts per near-dup threshold",
-        ),
-        "char_entropy_quality": QuerySpec(
-            char_entropy_quality, _entropy_sql(),
-            "char-unigram entropy + out-of-alphabet ratio, shuffle-free",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "source_quality_report": QuerySpec(
+        source_quality_report, SOURCE_QUALITY_REPORT_SQL,
+        "per-source datasheet: volume, langs, gate, near-dup exposure",
+    ),
+    "minhash_param_sweep": QuerySpec(
+        minhash_param_sweep, _sweep_sql(),
+        "banding-config sweep: precision/recall per (bands, rows)",
+    ),
+    "dedup_threshold_curve": QuerySpec(
+        dedup_threshold_curve, _curve_sql(),
+        "survivor/dropped counts per near-dup threshold",
+    ),
+    "char_entropy_quality": QuerySpec(
+        char_entropy_quality, _entropy_sql(),
+        "char-unigram entropy + out-of-alphabet ratio, shuffle-free",
+    ),
+}

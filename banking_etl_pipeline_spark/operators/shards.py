@@ -1,6 +1,4 @@
-"""Training-shard manifest tier over `documents` (REGISTRATION DEFERRED —
-listed in registry._DEFERRED_MODULE_NAMES; enable by moving this module's
-name into `registry._MODULES` once a driver-verification slot opens).
+"""Training-shard manifest tier over `documents`.
 
 The last hop of a pretraining data pipeline: lay the curated corpus out as
 fixed-token-budget shards (the WebDataset/TFRecord manifest a trainer's
@@ -144,18 +142,17 @@ FROM m
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "shard_assignment": QuerySpec(
-            shard_assignment, SHARD_ASSIGNMENT_SQL,
-            "per-doc training slot, exact running tokens, shard id",
-        ),
-        "shard_manifest": QuerySpec(
-            shard_manifest, SHARD_MANIFEST_SQL,
-            "per-shard doc/token mass and prefix range manifest",
-        ),
-        "shard_balance_report": QuerySpec(
-            shard_balance_report, SHARD_BALANCE_REPORT_SQL,
-            "shard count, mean tokens, worst over/underrun vs budget",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "shard_assignment": QuerySpec(
+        shard_assignment, SHARD_ASSIGNMENT_SQL,
+        "per-doc training slot, exact running tokens, shard id",
+    ),
+    "shard_manifest": QuerySpec(
+        shard_manifest, SHARD_MANIFEST_SQL,
+        "per-shard doc/token mass and prefix range manifest",
+    ),
+    "shard_balance_report": QuerySpec(
+        shard_balance_report, SHARD_BALANCE_REPORT_SQL,
+        "shard count, mean tokens, worst over/underrun vs budget",
+    ),
+}

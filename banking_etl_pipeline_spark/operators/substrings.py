@@ -1,7 +1,4 @@
-"""Substring-level (span) deduplication tier over `documents`
-(REGISTRATION DEFERRED — added to registry._DEFERRED_MODULE_NAMES after the
-round-5 tier registration; enable by moving this module's name into
-`registry._MODULES` once its backlog slot opens).
+"""Substring-level (span) deduplication tier over `documents`.
 
 Document-level dedup (dedup.py) misses the dominant contamination mode of
 real crawls: *spans* repeated across otherwise-distinct documents — license
@@ -311,22 +308,21 @@ GROUP BY j.doc_id, m.max_doc_freq
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "substring_dup_coverage": QuerySpec(
-            substring_dup_coverage, SUBSTRING_DUP_COVERAGE_SQL,
-            "per-doc duplicated W-token-window count and ppm ratio",
-        ),
-        "substring_hot_spans": QuerySpec(
-            substring_hot_spans, SUBSTRING_HOT_SPANS_SQL,
-            "top-20 most-widespread windows: the boilerplate strip list",
-        ),
-        "substring_span_merge": QuerySpec(
-            substring_span_merge, SUBSTRING_SPAN_MERGE_SQL,
-            "duplicated windows merged to maximal spans per document",
-        ),
-        "memorization_risk": QuerySpec(
-            memorization_risk, MEMORIZATION_RISK_SQL,
-            "per-doc max window doc-frequency + memorization flag",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "substring_dup_coverage": QuerySpec(
+        substring_dup_coverage, SUBSTRING_DUP_COVERAGE_SQL,
+        "per-doc duplicated W-token-window count and ppm ratio",
+    ),
+    "substring_hot_spans": QuerySpec(
+        substring_hot_spans, SUBSTRING_HOT_SPANS_SQL,
+        "top-20 most-widespread windows: the boilerplate strip list",
+    ),
+    "substring_span_merge": QuerySpec(
+        substring_span_merge, SUBSTRING_SPAN_MERGE_SQL,
+        "duplicated windows merged to maximal spans per document",
+    ),
+    "memorization_risk": QuerySpec(
+        memorization_risk, MEMORIZATION_RISK_SQL,
+        "per-doc max window doc-frequency + memorization flag",
+    ),
+}

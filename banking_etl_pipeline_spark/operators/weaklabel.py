@@ -1,6 +1,4 @@
-"""Weak-supervision / programmatic-labeling tier over `documents`
-(REGISTRATION DEFERRED to r4/r5, same policy as the other deferred tiers —
-see registry._DEFERRED_MODULE_NAMES).
+"""Weak-supervision / programmatic-labeling tier over `documents`.
 
 The Snorkel-style labeling workflow (public recipe): a bank of cheap
 deterministic labeling functions (LFs) votes keep(0)/filter(1)/abstain(-1)
@@ -333,22 +331,21 @@ FROM grid ORDER BY lf
 LF_COVERAGE_REPORT_SQL = _coverage_sql()
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "weak_label_matrix": QuerySpec(
-            weak_label_matrix, WEAK_LABEL_MATRIX_SQL,
-            "per-doc labeling-function vote matrix (Snorkel-style LFs)",
-        ),
-        "label_model_vote": QuerySpec(
-            label_model_vote, LABEL_MODEL_VOTE_SQL,
-            "weighted-majority label resolution, integer confidence",
-        ),
-        "lf_conflict_report": QuerySpec(
-            lf_conflict_report, LF_CONFLICT_REPORT_SQL,
-            "pairwise LF agreement/conflict from one aggregate",
-        ),
-        "lf_coverage_report": QuerySpec(
-            lf_coverage_report, LF_COVERAGE_REPORT_SQL,
-            "per-LF coverage/polarity/overlap/conflict (LFAnalysis)",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "weak_label_matrix": QuerySpec(
+        weak_label_matrix, WEAK_LABEL_MATRIX_SQL,
+        "per-doc labeling-function vote matrix (Snorkel-style LFs)",
+    ),
+    "label_model_vote": QuerySpec(
+        label_model_vote, LABEL_MODEL_VOTE_SQL,
+        "weighted-majority label resolution, integer confidence",
+    ),
+    "lf_conflict_report": QuerySpec(
+        lf_conflict_report, LF_CONFLICT_REPORT_SQL,
+        "pairwise LF agreement/conflict from one aggregate",
+    ),
+    "lf_coverage_report": QuerySpec(
+        lf_coverage_report, LF_COVERAGE_REPORT_SQL,
+        "per-LF coverage/polarity/overlap/conflict (LFAnalysis)",
+    ),
+}

@@ -66,33 +66,6 @@ _MODULES = [
 ]
 
 
-# Registration-deferred tiers: complete QuerySpec surfaces held out of
-# _MODULES until their driver-verification backlog slot opens. Currently
-# empty — all nineteen r4-r6 tiers are registered. To defer a future
-# tier, add its module name here (the module needs a `queries()` function
-# returning {key: QuerySpec}).
-_DEFERRED_MODULE_NAMES: tuple[str, ...] = ()
-
-
-def deferred_modules() -> list:
-    import importlib
-
-    return [
-        importlib.import_module(f".operators.{name}", __package__)
-        for name in _DEFERRED_MODULE_NAMES
-    ]
-
-
-def deferred_queries() -> dict[str, QuerySpec]:
-    out: dict[str, QuerySpec] = {}
-    for mod in deferred_modules():
-        for key, spec in mod.queries().items():
-            if key in out:  # pragma: no cover
-                raise ValueError(f"duplicate deferred key {key!r}")
-            out[key] = spec
-    return out
-
-
 def _driver_verified_keys() -> set[str]:
     """Keys with a fully-green row in any past driver CORRECTNESS_r*.json.
 
@@ -144,37 +117,14 @@ def _recorded_oracle_shas() -> dict[str, str]:
         return {}
 
 
-def _module_queries(mod) -> dict[str, QuerySpec]:
-    """A module's query dict — `QUERIES` attribute or `queries()` function
-    (the deferred tiers use the latter, so moving a name from
-    _DEFERRED_MODULE_NAMES into _MODULES works without rewriting the
-    module)."""
-    qs = getattr(mod, "QUERIES", None)
-    return dict(qs) if qs is not None else mod.queries()
-
-
 def _registered() -> dict[str, QuerySpec]:
     ordered: dict[str, QuerySpec] = {}
     for mod in _MODULES:
-        for key, spec in _module_queries(mod).items():
+        for key, spec in mod.QUERIES.items():
             if key in ordered:
                 raise ValueError(f"duplicate query key {key!r}")
             ordered[key] = spec
     return ordered
-
-
-def merged_queries() -> dict[str, QuerySpec]:
-    """Registered queries (unverified-first order) plus the deferred tiers
-    — the full built surface, for consumers that want both."""
-    out = dict(all_queries())
-    for key, spec in deferred_queries().items():
-        if key in out:
-            raise ValueError(
-                f"deferred key {key!r} collides with a registered query — "
-                "it would shadow the registered QuerySpec for CLI/dump_plans"
-            )
-        out[key] = spec
-    return out
 
 
 def driver_verified_keys() -> set[str]:

@@ -20,281 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from banking_etl_pipeline_spark.registry import all_queries
 from banking_etl_pipeline_spark.session import get_spark
 
-HEADLINE = [
-    "pricing_summary",
-    "shipping_priority",
-    "local_supplier_volume",
-    "order_priority_semi",
-    "returned_revenue_topn",
-    "forecast_revenue",
-    "promo_effect",
-    "parts_supplier_relationship",
-    "large_volume_customer",
-    "small_quantity_revenue",
-    "idle_customer_balance",
-    "volume_shipping",
-    "market_share",
-    "product_profit",
-    "priority_line_counts",
-    "customer_order_distribution",
-    "top_supplier_revenue",
-    "disjunctive_part_revenue",
-    "exclusive_return_supplier",
-    "range_join",
-    "percentiles",
-    "merge_upsert",
-    "skew_salted_join",
-    "join_left_stats",
-    "groupby_stats",
-    "window_range_7d",
-    "window_running_sum",
-    "sessionization",
-    "asof_join",
-    "anomaly_flags",
-    "json_extract",
-    "topk_orderby_limit",
-    "dq_range_violations",
-    "set_ops",
-    # extension operators (registered as they land)
-    "dedup_minhash_lsh",
-    "dedup_exact",
-    "dedup_simhash",
-    "ann_brute_force",
-    "text_quality_score",
-    "text_bpe_token_count",
-    "corpus_curation",
-    "ann_ivf",
-    "multimodal_decode",
-    "sample_hash",
-    "train_val_test_split",
-    "doc_chunking",
-    "heavy_hitters",
-    "decontamination",
-    "unpivot_long",
-    "scd2_intervals",
-    "min_cost_supplier",
-    "important_stock",
-    "excess_stock_supplier",
-    "tfidf_top_terms",
-    "repetition_ratio",
-    "stratified_sample",
-    "dup_clusters",
-    "embedding_centroids",
-    "kmeans_assign",
-    "inverted_index",
-    "dq_outlier_iqr",
-    "pack_sequences",
-    "lm_score",
-    "funnel_conversion",
-    "histogram_prices",
-    "cms_topk",
-    "hll_distinct",
-    "kmeans_update",
-    "bloom_filter_probe",
-    "ohlc_downsample",
-    "zorder_layout",
-    "incremental_agg",
-    "pii_mask",
-    "latest_event_snapshot",
-    "table_profile",
-    "gap_fill",
-    "cohort_retention",
-    "pps_sample",
-    "rolling_active_users",
-    "snapshot_diff",
-    "window_navigation",
-    "embedding_quantize",
-    "bpe_pair_stats",
-    "hll_merge",
-    "ohlc_reaggregate",
-    "table_checksum",
-    "skew_report",
-    "concurrent_sessions",
-    "fuzzy_join",
-    "rolling_hll_wau",
-    "compaction_plan",
-    "cdc_apply",
-    "bm25_retrieval",
-    "pmi_collocations",
-    "time_weighted_avg",
-    "dq_freshness",
-    "bipartite_rank",
-    "corr_exact",
-    "ab_test_lift",
-    "pii_scan",
-    "quantile_sketch",
-    "scan_schema_evolution",
-    "null_safe_join",
-    "not_in_vs_not_exists",
-    "set_ops_all",
-    "basket_pairs",
-    "top_paths",
-    "restatement_plan",
-    "dedup_survivors",
-    "dq_volume_trend",
-    "late_dim_quarantine",
-    "recursive_hierarchy",
-    "fifo_allocation",
-    "variant_extract",
-    "range_split_points",
-    "rate_limit_sample",
-    "monthly_trend",
-    "gram_matrix",
-    "embedding_drift",
-    "rfm_features",
-    "feature_hashing",
-    "dsir_importance",
-    "dedup_incremental",
-    "minhash_containment",
-    "boilerplate_strip",
-    "attribution_linear",
-    "business_day_latency",
-    "ann_recall_report",
-    "ewma_smoothing",
-    "weighted_sample_topk",
-    "semdedup_prune",
-    "multimodal_audio_windows",
-    "hard_negative_mining",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "ann_lsh",
-    "text_token_count",
-    "text_lang_id",
-    "text_fingerprint",
-    "mixture_plan",
-    "triangle_count",
-    "minhash_eval",
-    "decile_trim_gate",
-    "ccnet_buckets",
-    "winnowing_fingerprint",
-    "curation_funnel_v2",
-    "scd2_pit_join",
-    "leakage_free_features",
-    "user_level_split",
-    "k_anonymity_audit",
-    "vocab_coverage",
-    "training_shuffle",
-    # full-coverage tail (round 3): every remaining registered key except
-    # the 12 streaming queries, whose wall time is start/stop harness
-    # latency of the replay-to-memory-sink test rig, not operator
-    # throughput — benching them would add ~20 s of pure harness noise.
-    "multimodal_resize",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "approx_distinct",
-    "dq_null_counts",
-    "dq_dup_count",
-    "dq_orphans",
-    "scan_csv",
-    "scan_parquet",
-    "scan_text",
-    "scan_json",
-    "scan_orc",
-    "banking_txn_pipeline",
-    "window_lag",
-    "window_range_30d",
-    "pivot_wide",
-    "project",
-    "filter_compound",
-    "filter_null",
-    "filter_contains",
-    "filter_range",
-    "case_when_bucket",
-    "null_fill",
-    "parse_timestamp",
-    "date_parts",
-    "count_rows",
-    "count_distinct",
-    "conditional_sum",
-    "join_left_anti",
-    "ranking",
-    "cube_rollup",
-    "grouping_sets",
-    "string_funcs",
-    "date_arithmetic",
-    "array_funcs",
-    # round-5 registration: the eight former deferred tiers
-    "source_quality_report",
-    "minhash_param_sweep",
-    "dedup_threshold_curve",
-    "char_entropy_quality",
-    "bpe_merge_train",
-    "bpe_encode_report",
-    "heaps_law",
-    "zipf_tail_report",
-    "dp_count_release",
-    "l_diversity_audit",
-    "generalization_ladder",
-    "pii_redact_digest",
-    "bitext_margin_pairs",
-    "bitext_reciprocal_best",
-    "bitext_mining_report",
-    "bitext_lang_coverage",
-    "safety_lexicon_ratio",
-    "injection_pattern_scan",
-    "safety_blocklist_audit",
-    "safety_funnel",
-    "preference_pairs",
-    "preference_gap_report",
-    "preference_split",
-    "preference_budget_cap",
-    "curriculum_phases",
-    "anneal_repeat_plan",
-    "curriculum_order",
-    "phase_vocab_overlap",
-    "weak_label_matrix",
-    "label_model_vote",
-    "lf_conflict_report",
-    "lf_coverage_report",
-    "zonemap_prune_report",
-    # round-6 registration: the eleven former deferred tiers
-    "substring_dup_coverage",
-    "substring_hot_spans",
-    "substring_span_merge",
-    "memorization_risk",
-    "pq_encode",
-    "pq_codebook_report",
-    "pq_distortion_report",
-    "pq_ann_probe",
-    "shard_assignment",
-    "shard_manifest",
-    "shard_balance_report",
-    "dataset_diff",
-    "column_drift_report",
-    "changed_keys_sample",
-    "retrieval_mrr",
-    "retrieval_precision_recall",
-    "retrieval_ndcg",
-    "retrieval_knn_accuracy",
-    "epoch_shuffle_heads",
-    "temperature_mixture",
-    "resume_plan",
-    "ivm_join_delta",
-    "ivm_minmax_repair",
-    "ivm_topk_maintain",
-    "target_encoding_oof",
-    "woe_iv_report",
-    "mutual_information",
-    "calibration_bins",
-    "ece_report",
-    "brier_score",
-    "bfs_layers",
-    "bfs_frontier_report",
-    "bfs_reach_report",
-    "kmv_type_sketch",
-    "kmv_union_report",
-    "kmv_jaccard_report",
-    # r6-built deferred tiers (benched once registered; the HEADLINE
-    # filter drops keys not yet in the registry)
-    "shuffle_partition_plan",
-    "broadcast_plan",
-    "salting_plan",
-    "partition_skew_report",
-    "lsh_candidate_report",
-    "lsh_paramscan_report",
-    "lsh_recall_tradeoff_report",
-    "dedup_embedding_cosine_scaled",
-]
+
+def headline_keys(queries) -> list[str]:
+    """The benched keys: every registered key in registry order except the
+    `streaming_*` keys, which the headline has never included."""
+    return [k for k in queries if not k.startswith("streaming_")]
 
 
 def main() -> None:
@@ -314,9 +44,9 @@ def main() -> None:
     spark = get_spark(app_name="bench",
                       shuffle_partitions=int(sp) if sp else None)
     queries = all_queries()
-    keys = [k for k in HEADLINE if k in queries]
+    keys = headline_keys(queries)
     # scale runs (scripts/make_scale_data.py → .scratch/sf1) bench a subset:
-    # SPARK_GRAFT_BENCH_KEYS=a,b,c restricts to those keys, HEADLINE order
+    # SPARK_GRAFT_BENCH_KEYS=a,b,c restricts to those keys, registry order
     subset = os.environ.get("SPARK_GRAFT_BENCH_KEYS")
     if subset:
         wanted = {k.strip() for k in subset.split(",") if k.strip()}

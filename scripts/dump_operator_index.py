@@ -110,25 +110,12 @@ def _update_oracle_shas(queries) -> None:
           f"(stamped_round={latest_round})")
 
 
-def _deferred_queries() -> dict[str, dict]:
-    """Registration-deferred operator tiers (registry.deferred_modules —
-    the single source of the deferred list)."""
-    from banking_etl_pipeline_spark.registry import deferred_modules
-
-    return {
-        mod.__name__.split("banking_etl_pipeline_spark.")[-1]: mod.queries()
-        for mod in deferred_modules()
-    }
-
-
 def main() -> None:
     verified = driver_verified_keys()
     key_module: dict[str, str] = {}
-    from banking_etl_pipeline_spark.registry import _module_queries
-
     for mod in _MODULES:
         name = mod.__name__.split("banking_etl_pipeline_spark.")[-1]
-        for key in _module_queries(mod):
+        for key in mod.QUERIES:
             key_module[key] = name
     queries = all_queries()
     lines = [
@@ -153,25 +140,6 @@ def main() -> None:
             f"| {i} | `{key}` | {key_module.get(key, '?')} | {status} "
             f"| {desc} |"
         )
-    deferred = _deferred_queries()
-    if deferred:
-        lines += [
-            "",
-            "## Deferred tiers (built, locally verified, not yet registered)",
-            "",
-            f"{sum(len(q) for q in deferred.values())} additional queries "
-            "with complete builders + DuckDB oracles, held out of the "
-            "registry until the driver-verification backlog drains (round-2 "
-            "verdict freeze). Each has an oracle-parity / plan-shape / "
-            "empty-universe / hot-key / replay suite in tests/.",
-            "",
-            "| key | module | description |",
-            "|-----|--------|-------------|",
-        ]
-        for name, qs in deferred.items():
-            for key, spec in qs.items():
-                desc = (spec.doc or "").replace("|", "\\|")
-                lines.append(f"| `{key}` | {name} | {desc} |")
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "OPERATORS.md")
     with open(out, "w") as f:

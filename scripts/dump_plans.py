@@ -71,8 +71,7 @@ GALLERY: dict[str, str] = {
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="dump_plans")
-    from banking_etl_pipeline_spark.registry import merged_queries
-    queries = merged_queries()
+    queries = all_queries()
     out = [
         "# PLANS — representative physical plans (sf0.001, local[32], AQE on)",
         "",

@@ -47,7 +47,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan_survey")
     queries = all_queries()
-    keys = [k for k in bench.HEADLINE if k in queries]
+    keys = bench.headline_keys(queries)
     subset = os.environ.get("SPARK_GRAFT_BENCH_KEYS")
     if subset:
         wanted = {k.strip() for k in subset.split(",") if k.strip()}

@@ -37,17 +37,6 @@ def main() -> int:
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
     con = duck_connection(sf)
     q, osql = mod.queries(), mod.oracle_sql()
-    if os.environ.get("SPARK_GRAFT_INCLUDE_DEFERRED"):
-        # r05 registration rehearsal: run the registration-deferred tiers
-        # through the EXACT same comparison as the registered surface.
-        from banking_etl_pipeline_spark.registry import (  # noqa: E402
-            deferred_queries,
-        )
-
-        for key, spec in deferred_queries().items():
-            assert key not in q, f"deferred key collides: {key}"
-            q[key] = spec.build
-            osql[key] = spec.oracle
     # SPARK_GRAFT_ONLY_KEYS=a,b,c restricts the comparison to those keys
     # (debug / resume-after-crash runs); the pending-sha snapshot below is
     # skipped for partial runs so a subset can never masquerade as a full

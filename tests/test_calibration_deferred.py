@@ -1,8 +1,10 @@
-"""Local verification for the registration-deferred probability-
-calibration tier (operators/calibration.py): reliability bins, exact ECE,
-int64-safe Brier score over the weak-label model's confidences with
-Bernoulli(conf) md5-gated ground truth. Same policy as the other deferred
-suites.
+"""Probability-calibration tier (operators/calibration.py): reliability
+bins, exact ECE, int64-safe Brier score over the weak-label model's
+confidences with Bernoulli(conf) md5-gated ground truth.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -11,8 +13,8 @@ import pytest
 
 from banking_etl_pipeline_spark.operators.calibration import (
     N_BINS,
+    QUERIES,
     _graded,
-    queries as cal_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
@@ -20,11 +22,11 @@ from tests.oracle_compare import compare, duck_connection
 
 @pytest.fixture(scope="module")
 def cq():
-    return cal_queries()
+    return QUERIES
 
 
 @pytest.mark.parametrize(
-    "key", ["calibration_bins", "ece_report", "brier_score"]
+    "key", ["ece_report", "brier_score"]
 )
 def test_calibration_oracle_parity(key, spark, sf_dir, cq):
     spec = cq[key]

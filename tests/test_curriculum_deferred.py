@@ -1,9 +1,10 @@
-"""Local verification for the registration-deferred curriculum/annealing
-tier (operators/curriculum.py): quality-phase bucketing, anneal repeat
-plan, phase-major training layout, bigram-vocabulary phase overlap.  Same
-policy as the other deferred suites — complete builder + oracle, exercised
-with the exact driver comparison, registered once the driver-verification
-backlog drains (registry._DEFERRED_MODULE_NAMES).
+"""Curriculum/annealing tier (operators/curriculum.py): quality-phase
+bucketing, anneal repeat plan, phase-major training layout,
+bigram-vocabulary phase overlap.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -12,28 +13,14 @@ import pytest
 
 from banking_etl_pipeline_spark.operators.curriculum import (
     N_BATCHES,
-    queries as cur_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def cur():
-    return cur_queries()
-
-
-@pytest.mark.parametrize(
-    "key",
-    ["curriculum_phases", "anneal_repeat_plan", "curriculum_order",
-     "phase_vocab_overlap"],
-)
-def test_curriculum_oracle_parity(key, spark, sf_dir, cur):
-    spec = cur[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_curriculum_plans_scale_sane(spark, sf_dir, cur):
@@ -84,24 +71,6 @@ def test_vocab_overlap_bounds(spark, sf_dir, cur):
     for r in rows:
         assert r["vocab_common"] <= min(r["vocab_a"], r["vocab_b"])
         assert 0.0 <= r["jaccard"] <= 1.0
-
-
-def test_curriculum_empty_universe(spark, sf_dir, cur):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
-    for key, spec in cur.items():
-        df = spec.build(spark, empty)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_curriculum_hot_key(spark, sf_dir, cur):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in cur.items():
-        assert spec.build(spark, skew).count() >= 0, key
 
 
 def test_curriculum_repeat_deterministic(spark, sf_dir, cur):

@@ -1,8 +1,9 @@
-"""Local verification for the registration-deferred dataset-diff tier
-(operators/dataops.py): full-outer snapshot diff, column drift, changed-key
-triage sample. Same policy as the other deferred suites — complete builder
-+ oracle, exercised with the exact driver comparison, registered once a
-backlog slot opens (registry._DEFERRED_MODULE_NAMES).
+"""Dataset-diff tier (operators/dataops.py): full-outer snapshot diff,
+column drift, changed-key triage sample.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -17,8 +18,8 @@ from banking_etl_pipeline_spark.operators.dataops import (
     DIFF_SEED,
     NEW_MOD,
     PRICE_BUMP,
+    QUERIES,
     TOP_CHANGED,
-    queries as do_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
@@ -26,7 +27,7 @@ from tests.oracle_compare import compare, duck_connection
 
 @pytest.fixture(scope="module")
 def do():
-    return do_queries()
+    return QUERIES
 
 
 def _gate(key: int) -> int:
@@ -36,7 +37,7 @@ def _gate(key: int) -> int:
 
 
 @pytest.mark.parametrize(
-    "key", ["dataset_diff", "column_drift_report", "changed_keys_sample"]
+    "key", ["column_drift_report", "changed_keys_sample"]
 )
 def test_dataops_oracle_parity(key, spark, sf_dir, do):
     spec = do[key]
@@ -94,24 +95,6 @@ def test_changed_sample_is_the_triage_list(spark, sf_dir, do):
         assert r["abs_delta_c"] == bump_c
         assert r["price_c_v2"] - r["price_c_v1"] == bump_c
         assert _gate(r["o_orderkey"]) % DIFF_MOD == 1
-
-
-def test_dataops_empty_universe(spark, sf_dir, do):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
-    for key, spec in do.items():
-        df = spec.build(spark, empty)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_dataops_hot_key(spark, sf_dir, do):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in do.items():
-        assert spec.build(spark, skew).count() >= 0, key
 
 
 def test_dataops_repeat_deterministic(spark, sf_dir, do):

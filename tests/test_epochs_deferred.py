@@ -1,9 +1,10 @@
-"""Local verification for the registration-deferred epoch/dataloader
-planning tier (operators/epochs.py): per-epoch seeded shuffle heads,
-temperature-scaled largest-remainder token apportionment, crash-resume
-point against the shard manifest. Same policy as the other deferred
-suites — complete builder + oracle, exercised with the exact driver
-comparison, registered once a backlog slot opens.
+"""Epoch/dataloader planning tier (operators/epochs.py): per-epoch seeded
+shuffle heads, temperature-scaled largest-remainder token apportionment,
+crash-resume point against the shard manifest.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -14,27 +15,15 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.epochs import (
     EPOCHS,
     HEADS,
+    QUERIES,
     T_BUDGET,
-    queries as ep_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def eq():
-    return ep_queries()
-
-
-@pytest.mark.parametrize(
-    "key", ["epoch_shuffle_heads", "temperature_mixture", "resume_plan"]
-)
-def test_epochs_oracle_parity(key, spark, sf_dir, eq):
-    spec = eq[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_epochs_plans_scale_sane(spark, sf_dir, eq):

@@ -1,6 +1,9 @@
-"""Local verification for the registration-deferred graph-traversal tier
-(operators/graphs.py): bounded-round frontier-join BFS over the
-md5-derived order graph. Same policy as the other deferred suites.
+"""Graph-traversal tier (operators/graphs.py): bounded-round
+frontier-join BFS over the md5-derived order graph.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -13,27 +16,15 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.graphs import (
     GRAPH_SEED,
     MAX_DEPTH,
+    QUERIES,
     SEED_MOD,
-    queries as graph_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def gq():
-    return graph_queries()
-
-
-@pytest.mark.parametrize(
-    "key", ["bfs_layers", "bfs_frontier_report", "bfs_reach_report"]
-)
-def test_graphs_oracle_parity(key, spark, sf_dir, gq):
-    spec = gq[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_graphs_plans_scale_sane(spark, sf_dir, gq):

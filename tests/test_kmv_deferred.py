@@ -1,7 +1,9 @@
-"""Local verification for the registration-deferred KMV set-operation
-sketch tier (operators/kmv.py): bottom-K sketches, merged-sketch union
-cardinality, sketch-overlap Jaccard/intersection. Same policy as the
-other deferred suites.
+"""KMV set-operation sketch tier (operators/kmv.py): bottom-K sketches,
+merged-sketch union cardinality, sketch-overlap Jaccard/intersection.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -15,26 +17,14 @@ from banking_etl_pipeline_spark.operators.kmv import (
     H_DOMAIN,
     KMV_K,
     KMV_SEED,
-    queries as kmv_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def kq():
-    return kmv_queries()
-
-
-@pytest.mark.parametrize(
-    "key", ["kmv_type_sketch", "kmv_union_report", "kmv_jaccard_report"]
-)
-def test_kmv_oracle_parity(key, spark, sf_dir, kq):
-    spec = kq[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_kmv_plans_scale_sane(spark, sf_dir, kq):

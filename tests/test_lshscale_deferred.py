@@ -1,9 +1,12 @@
-"""Local verification for the registration-deferred banding-parameter
-study tier (operators/lshscale.py): per-geometry candidate budgets,
-probe-set recall tradeoff, and the scaled-geometry near-dup detector.
-Same policy as the other deferred suites, plus a planted-duplicates
-corpus proving the scaled detector finds real near-dups it was built
-for (the clean corpus correctly yields zero 0.9-cosine pairs).
+"""Banding-parameter study tier (operators/lshscale.py): per-geometry
+candidate budgets, probe-set recall tradeoff, and the scaled-geometry
+near-dup detector, plus a planted-duplicates corpus proving the scaled
+detector finds real near-dups it was built for (the clean corpus
+correctly yields zero 0.9-cosine pairs).
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.lshscale import (
     CONFIGS,
     DUP_THRESHOLD_SCALED,
-    queries as lshscale_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
@@ -24,13 +27,10 @@ from tests.oracle_compare import compare, duck_connection
 
 @pytest.fixture(scope="module")
 def lq():
-    return lshscale_queries()
+    return QUERIES
 
 
-@pytest.mark.parametrize(
-    "key", ["lsh_paramscan_report", "lsh_recall_tradeoff_report",
-            "dedup_embedding_cosine_scaled"]
-)
+@pytest.mark.parametrize("key", ["dedup_embedding_cosine_scaled"])
 def test_lshscale_oracle_parity(key, spark, sf_dir, lq):
     spec = lq[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),

@@ -1,8 +1,11 @@
-"""Local verification for the registration-deferred scale-planner tier
-(operators/planner.py): per-table size/partition plans, broadcast
-classification, hot-key salting, hash-bucket skew. Same policy as the
-other deferred suites: oracle parity + plan sanity + an independent
-Python model of the exact integer arithmetic.
+"""Scale-planner tier (operators/planner.py): per-table size/partition
+plans, broadcast classification, hot-key salting, hash-bucket skew —
+plan sanity plus an independent Python model of the exact integer
+arithmetic.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -18,9 +21,9 @@ from banking_etl_pipeline_spark.operators.planner import (
     MAX_PARTITION_BYTES,
     N_BUCKETS,
     PROJECTION,
+    QUERIES,
     SALT_SEED,
     SHUFFLE_PARTITIONS,
-    queries as planner_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
@@ -28,12 +31,12 @@ from tests.oracle_compare import compare, duck_connection
 
 @pytest.fixture(scope="module")
 def pq():
-    return planner_queries()
+    return QUERIES
 
 
 @pytest.mark.parametrize(
     "key", ["shuffle_partition_plan", "broadcast_plan", "salting_plan",
-            "partition_skew_report", "lsh_candidate_report"]
+            "partition_skew_report"]
 )
 def test_planner_oracle_parity(key, spark, sf_dir, pq):
     spec = pq[key]

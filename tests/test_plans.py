@@ -21,6 +21,7 @@ import pytest
 
 from banking_etl_pipeline_spark.plans import plan_of
 from banking_etl_pipeline_spark.registry import all_queries
+from tests.conftest import record_plans
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +31,17 @@ def queries():
 
 def _build(queries, spark, sf_dir, key):
     return queries[key].build(spark, sf_dir)
+
+
+@pytest.fixture(scope="module")
+def batch_plans(spark, sf_dir, sf_plans, queries):
+    """key → (formatted, simple) plan text of every non-streaming key — the
+    shared input of the whole-registry plan sweeps below. Keys the
+    oracle-parity sweep has not built yet are built here."""
+    for key, spec in queries.items():
+        if not key.startswith("streaming_") and key not in sf_plans:
+            record_plans(sf_plans, key, spec.build(spark, sf_dir))
+    return sf_plans
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir, queries):
@@ -77,17 +89,16 @@ def test_partsupp_shapes(spark, sf_dir, queries):
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
 
 
-def test_no_python_eval_in_hot_paths(spark, sf_dir, queries):
+def test_no_python_eval_in_hot_paths(batch_plans):
     """Relational/window/dedup/text operators must stay JVM-side; only the
     multimodal operators (explicit Arrow mapInPandas plumbing) may run
     Python."""
     python_ok = {"multimodal_decode", "multimodal_resize",
                  "multimodal_features", "multimodal_frame_sample",
                  "multimodal_audio_windows"}
-    for key, spec in queries.items():
-        if key in python_ok or key.startswith("streaming_"):
+    for key, (p, _) in batch_plans.items():
+        if key in python_ok:
             continue
-        p = plan_of(spec.build(spark, sf_dir))
         for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                        "FlatMapGroupsInPandas"):
             assert marker not in p, f"{key}: Python eval node in plan ({marker})"
@@ -231,14 +242,13 @@ def test_funnel_three_windows_one_shuffle(spark, sf_dir, queries):
     assert p.count("Sort ") == 1
 
 
-def test_no_cartesian_product_anywhere(spark, sf_dir, queries):
+def test_no_cartesian_product_anywhere(batch_plans):
     """Global invariant: no batch query may plan a CartesianProduct — every
     cross join in the engine is a broadcast of a scalar/tiny relation
     (BroadcastNestedLoopJoin), never a shuffled n×m product."""
-    for key, spec in queries.items():
-        if key.startswith("streaming_") or key == "banking_txn_pipeline":
+    for key, (p, _) in batch_plans.items():
+        if key == "banking_txn_pipeline":
             continue
-        p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: CartesianProduct in plan"
 
 
@@ -295,15 +305,14 @@ def _unbounded_broadcast_explodes(plan: str) -> list[str]:
     return bad
 
 
-def test_no_unbounded_broadcast_explode_anywhere(spark, sf_dir, queries):
+def test_no_unbounded_broadcast_explode_anywhere(batch_plans):
     """Global invariant (r9): no query may broadcast an exploded fact-side
     relation — every BroadcastExchange containing a Generate must explode
     over a bounded input (aggregate / Range dimension / persisted
     relation), never directly over a table scan."""
-    for key, spec in queries.items():
-        if key.startswith("streaming_") or key == "banking_txn_pipeline":
+    for key, (_, p) in batch_plans.items():
+        if key == "banking_txn_pipeline":
             continue
-        p = plan_of(spec.build(spark, sf_dir), "simple")
         bad = _unbounded_broadcast_explodes(p)
         assert not bad, f"{key}: broadcast over unbounded explode: {bad}"
 

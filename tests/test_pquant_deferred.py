@@ -1,8 +1,9 @@
-"""Local verification for the registration-deferred product-quantization
-tier (operators/pquant.py): packed PQ codes, codebook/distortion audits,
-ADC probe search. Same policy as the other deferred suites — complete
-builder + oracle, exercised with the exact driver comparison, registered
-once a backlog slot opens (registry._DEFERRED_MODULE_NAMES).
+"""Product-quantization tier (operators/pquant.py): packed PQ codes,
+codebook/distortion audits, ADC probe search.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -14,8 +15,8 @@ from banking_etl_pipeline_spark.operators.pquant import (
     N_PROBES,
     PQ_K,
     PQ_M,
+    QUERIES,
     TOP_K,
-    queries as pq_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
@@ -23,14 +24,10 @@ from tests.oracle_compare import compare, duck_connection
 
 @pytest.fixture(scope="module")
 def pq():
-    return pq_queries()
+    return QUERIES
 
 
-@pytest.mark.parametrize(
-    "key",
-    ["pq_encode", "pq_codebook_report", "pq_distortion_report",
-     "pq_ann_probe"],
-)
+@pytest.mark.parametrize("key", ["pq_distortion_report"])
 def test_pquant_oracle_parity(key, spark, sf_dir, pq):
     spec = pq[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
@@ -102,24 +99,6 @@ def test_ann_probe_shape_and_self_retrieval(spark, sf_dir, pq):
         self_rows = [r for r in rs if r["vec_id"] == qid]
         assert self_rows, f"probe {qid} not retrieved in its own top-{TOP_K}"
         assert self_rows[0]["adc_dist"] == dists[0]
-
-
-def test_pquant_empty_universe(spark, sf_dir, pq):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
-    for key, spec in pq.items():
-        df = spec.build(spark, empty)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_pquant_hot_key(spark, sf_dir, pq):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in pq.items():
-        assert spec.build(spark, skew).count() >= 0, key
 
 
 def test_pquant_repeat_deterministic(spark, sf_dir, pq):

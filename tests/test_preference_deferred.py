@@ -1,9 +1,9 @@
-"""Local verification for the registration-deferred preference-pair tier
-(operators/preference.py): rank-aligned chosen/rejected pairing, gap
-report, prompt-level split, token-budget cap.  Same policy as the other
-deferred suites — complete builder + oracle, exercised with the exact
-driver comparison, registered once the driver-verification backlog drains
-(append to registry._MODULES).
+"""Preference-pair tier (operators/preference.py): rank-aligned
+chosen/rejected pairing, gap report, prompt-level split, token-budget cap.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -13,29 +13,15 @@ import pytest
 from banking_etl_pipeline_spark.operators.preference import (
     GAP6_T,
     PREF_K,
+    QUERIES,
     TOKEN_BUDGET,
-    queries as pref_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def pref():
-    return pref_queries()
-
-
-@pytest.mark.parametrize(
-    "key",
-    ["preference_pairs", "preference_gap_report", "preference_split",
-     "preference_budget_cap"],
-)
-def test_preference_oracle_parity(key, spark, sf_dir, pref):
-    spec = pref[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_preference_plans_scale_sane(spark, sf_dir, pref):
@@ -93,24 +79,6 @@ def test_gap_report_bounds(spark, sf_dir, pref):
     for r in pref["preference_gap_report"].build(spark, sf_dir).collect():
         assert 1 <= r["n_pairs"] <= PREF_K
         assert GAP6_T <= r["min_gap6"] <= r["mean_gap6"] <= r["max_gap6"]
-
-
-def test_preference_empty_universe(spark, sf_dir, pref):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
-    for key, spec in pref.items():
-        df = spec.build(spark, empty)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_preference_hot_key(spark, sf_dir, pref):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in pref.items():
-        assert spec.build(spark, skew).count() >= 0, key
 
 
 def test_preference_repeat_deterministic(spark, sf_dir, pref):

@@ -82,17 +82,13 @@ def test_no_oracle_emits_hugeint(sf_dir):
     """r4 driver lesson (priority_line_counts, pack_sequences): DuckDB
     SUM(int)→HUGEINT and DECIMAL(38,*) pandas-convert to float64/object
     while Spark emits bigint — invisible to fetchall() compares, fails the
-    driver's value hash. DESCRIBE every oracle (registered + deferred) and
+    driver's value hash. DESCRIBE every registered oracle and
     reject those types at the top level; <1 s for the whole surface."""
-    from banking_etl_pipeline_spark.registry import deferred_queries
     from tests.oracle_compare import duck_connection, oracle_type_offenders
 
     con = duck_connection(sf_dir)
     offenders = {}
-    specs = {**all_queries(), **deferred_queries()}
-    for key, spec in specs.items():
-        if spec.oracle is None:
-            continue
+    for key, spec in all_queries().items():
         bad = oracle_type_offenders(con, spec.oracle)
         if bad:
             offenders[key] = bad
@@ -105,16 +101,14 @@ def test_no_oracle_emits_hugeint(sf_dir):
 def test_r6_registration_landed():
     """The round-6 registrations: the eleven r4/r5 deferred tiers plus the
     two tiers built this round (planner, lshscale) are all in the registry
-    proper (276 keys), each spec complete, and the deferred list is empty.
+    proper (276 keys), each spec complete.
     Ordering assertions are artifact-state-agnostic (the r5 lesson: a
     hard-coded 'key X is unverified' flips the moment the next CORRECTNESS
     file lands) — they derive from driver_verified_keys() live."""
-    from banking_etl_pipeline_spark.registry import deferred_queries
     from banking_etl_pipeline_spark.spec import QuerySpec
 
     merged = all_queries()
     assert len(merged) == 276
-    assert deferred_queries() == {}
     for key in ("substring_dup_coverage", "pq_encode", "shard_assignment",
                 "dataset_diff", "retrieval_ndcg", "epoch_shuffle_heads",
                 "ivm_join_delta", "target_encoding_oof", "ece_report",
@@ -137,52 +131,20 @@ def test_r6_registration_landed():
             assert order.index(key) < order.index("pricing_summary")
 
 
-def test_deferred_tiers_ready_for_registration():
-    """Whatever is deferred NOW must drop into the registry without
-    collisions, each spec complete — enabling a tier is a one-name move in
-    registry._MODULES. State-agnostic: an empty deferred list (the post-r6
-    state) passes vacuously."""
-    from banking_etl_pipeline_spark.registry import deferred_modules
+def test_every_module_registers_complete_specs():
+    """One registration style: every registry module exposes a non-empty
+    module-level QUERIES dict whose specs each carry a callable builder, a
+    WITH/SELECT oracle (set_ops opens with a parenthesized SELECT) and a
+    description."""
+    from banking_etl_pipeline_spark import registry
     from banking_etl_pipeline_spark.spec import QuerySpec
 
-    registered = set(all_queries())
-    seen: set[str] = set()
-    for mod in deferred_modules():
-        qs = mod.queries()
-        assert qs, mod.__name__
+    for mod in registry._MODULES:
+        qs = getattr(mod, "QUERIES", None)
+        assert isinstance(qs, dict) and qs, f"{mod.__name__}: no QUERIES"
         for key, spec in qs.items():
-            assert key not in registered, f"{key} collides with registry"
-            assert key not in seen, f"{key} duplicated across deferred tiers"
-            seen.add(key)
             assert isinstance(spec, QuerySpec), key
             assert callable(spec.build), key
-            assert spec.oracle and spec.oracle.strip().upper().startswith(
-                ("WITH", "SELECT")), f"{key}: oracle missing/odd"
+            assert spec.oracle and spec.oracle.strip().lstrip("(").upper() \
+                .startswith(("WITH", "SELECT")), f"{key}: oracle missing/odd"
             assert spec.doc, f"{key}: missing description"
-
-
-def test_deferred_registration_actually_works(monkeypatch):
-    """Don't just assert readiness — perform the next registration against
-    a patched _MODULES and walk the real code path (this is the test that
-    would have caught _registered() requiring a QUERIES attribute the
-    deferred modules don't have). State-agnostic: baseline counts come
-    from the live registry, not hard-coded round totals."""
-    from banking_etl_pipeline_spark import registry
-
-    base = len(registry.all_queries())
-    monkeypatch.setattr(
-        registry, "_MODULES",
-        list(registry._MODULES) + registry.deferred_modules(),
-    )
-    merged = registry.all_queries()
-    assert len(merged) == base + len(registry.deferred_queries())
-    assert "pq_encode" in merged and "pricing_summary" in merged
-    # any never-driver-verified deferred key must emit before verified keys
-    order = list(merged)
-    verified = registry.driver_verified_keys()
-    unverified_deferred = [
-        k for k in registry.deferred_queries() if k not in verified
-    ]
-    if unverified_deferred and "pricing_summary" in verified:
-        for key in unverified_deferred:
-            assert order.index(key) < order.index("pricing_summary")

@@ -1,9 +1,10 @@
-"""Local verification for the registration-deferred ranked-retrieval
-evaluation tier (operators/retrieval.py): MRR, precision/recall@k,
-micro-NDCG, kNN-label accuracy over the shared banded-LSH index. Same
-policy as the other deferred suites — complete builder + oracle,
-exercised with the exact driver comparison, registered once a backlog
-slot opens (registry._DEFERRED_MODULE_NAMES).
+"""Ranked-retrieval evaluation tier (operators/retrieval.py): MRR,
+precision/recall@k, micro-NDCG, kNN-label accuracy over the shared
+banded-LSH index.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -11,33 +12,19 @@ from __future__ import annotations
 import pytest
 
 from banking_etl_pipeline_spark.operators.retrieval import (
+    QUERIES,
     RET_K,
     RET_KS,
     RET_Q_MOD,
     _qset,
     _ranked,
-    queries as ret_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def rq():
-    return ret_queries()
-
-
-@pytest.mark.parametrize(
-    "key",
-    ["retrieval_mrr", "retrieval_precision_recall", "retrieval_ndcg",
-     "retrieval_knn_accuracy"],
-)
-def test_retrieval_oracle_parity(key, spark, sf_dir, rq):
-    spec = rq[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_retrieval_plans_scale_sane(spark, sf_dir, rq):

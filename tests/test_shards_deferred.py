@@ -1,9 +1,10 @@
-"""Local verification for the registration-deferred training-shard tier
-(operators/shards.py): deterministic shard assignment off the exact
-distributed prefix sum, per-shard manifest, balance gate. Same policy as
-the other deferred suites — complete builder + oracle, exercised with the
-exact driver comparison, registered once a backlog slot opens
-(registry._DEFERRED_MODULE_NAMES).
+"""Training-shard tier (operators/shards.py): deterministic shard
+assignment off the exact distributed prefix sum, per-shard manifest,
+balance gate.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -12,8 +13,8 @@ import pytest
 
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.shards import (
+    QUERIES,
     SHARD_TOKENS,
-    queries as shard_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
@@ -21,7 +22,7 @@ from tests.oracle_compare import compare, duck_connection
 
 @pytest.fixture(scope="module")
 def sh():
-    return shard_queries()
+    return QUERIES
 
 
 @pytest.mark.parametrize(
@@ -88,24 +89,6 @@ def test_balance_gate_bounds(spark, sf_dir, sh):
     assert bal["worst_overrun"] < max_doc
     underfull = [r for r in m if r["shard_tokens"] < SHARD_TOKENS // 2]
     assert len(underfull) <= 1  # only the tail shard may run light
-
-
-def test_shards_empty_universe(spark, sf_dir, sh):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
-    for key, spec in sh.items():
-        df = spec.build(spark, empty)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_shards_hot_key(spark, sf_dir, sh):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in sh.items():
-        assert spec.build(spark, skew).count() >= 0, key
 
 
 def test_shards_repeat_deterministic(spark, sf_dir, sh):

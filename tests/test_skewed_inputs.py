@@ -11,45 +11,25 @@ this suite documents that correctness never depended on key spread.
 
 from __future__ import annotations
 
-import os
-
+import duckdb
 import pytest
 
 from pyspark.sql import functions as F
 
-from banking_etl_pipeline_spark.catalog import TABLES, table
+from banking_etl_pipeline_spark.catalog import TABLES
 from banking_etl_pipeline_spark.registry import all_queries
+from tests.oracle_compare import compare
 
 _SKEW_DIR = "/tmp/banking_etl_pipeline_spark_skewed_v2"
 
-# key-partitioned operators that must survive a single hot key
+# Every batch key (the self-seeding banking pipeline reads no tables) plus
+# the two streaming keys whose state groups collapse to one key when one
+# user owns EVERY event: the anomaly state and the EWMA fold.
 _KEYS = [
-    "window_running_sum",
-    "window_lag",
-    "window_range_7d",
-    "sessionization",
-    "concurrent_sessions",
-    "time_weighted_avg",
-    "rolling_active_users",
-    "top_paths",
-    "latest_event_snapshot",
-    "cdc_apply",
-    "groupby_stats",
-    "skew_salted_join",
-    "streaming_anomaly",
-    # one user owns EVERY event: the whole series lands in one array fold /
-    # one state group — the worst case for the EWMA pair and the
-    # interval-join attribution
-    "ewma_smoothing",
-    "streaming_ewma",
-    "attribution_linear",
-    # one language owns EVERY document: the per-language rank windows and
-    # strata aggregates collapse to a single partition group
-    "decile_trim_gate",
-    "ccnet_buckets",
-    "stratified_sample",
-    "mixture_plan",
-    "curation_funnel_v2",
+    k for k in all_queries()
+    if k != "banking_txn_pipeline"
+    and (not k.startswith("streaming_")
+         or k in ("streaming_anomaly", "streaming_ewma"))
 ]
 
 
@@ -60,11 +40,32 @@ def skew_dir(spark, sf_dir):
     return build_skewed_universe(spark, sf_dir, _SKEW_DIR)
 
 
+@pytest.fixture(scope="module")
+def skew_con(skew_dir):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS"
+            f" SELECT * FROM '{skew_dir}/{t}.parquet/*.parquet'"
+        )
+    yield con
+    con.close()
+
+
 @pytest.mark.parametrize("key", _KEYS)
-def test_hot_key_completes(key, spark, skew_dir):
-    df = all_queries()[key].build(spark, skew_dir)
-    n = df.count()
-    assert n >= 0
+def test_hot_key_completes(key, spark, skew_dir, skew_con):
+    """Completes on the one-hot-key universe; batch keys also match the
+    oracle there — the exact driver comparison under pathological key
+    distribution, where any missing tie-break or order-dependent float fold
+    would flip the hash (companion to the empty-universe parity gate)."""
+    spec = all_queries()[key]
+    df = spec.build(spark, skew_dir)
+    if key.startswith("streaming_"):
+        assert df.count() >= 0
+        return
+    r = compare(df, skew_con, spec.oracle)
+    assert r["row_count_match"] and r["columns_match"] \
+        and r["values_match"], f"{key}: {r['detail']}"
 
 
 def test_hot_key_semantics_running_sum(spark, skew_dir):
@@ -103,34 +104,3 @@ def test_ewma_dispatch_threshold(spark, skew_dir, monkeypatch):
     monkeypatch.setattr(W, "EWMA_MAX_ARRAY_LEN", 10)
     p = plan_of(W.ewma_smoothing(spark, skew_dir))
     assert "FlatMapGroupsInPandas" in p
-
-
-def test_skewed_universe_oracle_parity(spark, skew_dir):
-    """Value-level oracle parity on the one-hot-key universe — the exact
-    driver comparison under pathological key distribution, where any
-    missing tie-break or order-dependent float fold would flip the hash
-    (companion to the empty-universe parity gate)."""
-    import duckdb
-
-    from banking_etl_pipeline_spark.registry import all_queries
-    from tests.oracle_compare import TABLES as _T, compare
-
-    con = duckdb.connect()
-    for t in _T:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM '{skew_dir}/{t}.parquet/*.parquet'"
-        )
-    from banking_etl_pipeline_spark.registry import merged_queries
-
-    specs = merged_queries()
-    bad = []
-    for key, spec in specs.items():
-        if (spec.oracle is None or key.startswith("streaming_")
-                or key == "banking_txn_pipeline"):
-            continue
-        r = compare(spec.build(spark, skew_dir), con, spec.oracle)
-        if not (r["row_count_match"] and r["columns_match"]
-                and r["values_match"]):
-            bad.append((key, str(r["detail"])[:120]))
-    assert not bad, f"skewed-universe parity mismatches: {bad}"

@@ -1,9 +1,10 @@
-"""Local verification for the registration-deferred weak-supervision tier
-(operators/weaklabel.py): LF vote matrix, weighted-majority label model,
-pairwise conflict report, per-LF coverage analysis.  Same policy as the
-other deferred suites — complete builder + oracle, exercised with the
-exact driver comparison, registered once the driver-verification backlog
-drains (registry._DEFERRED_MODULE_NAMES).
+"""Weak-supervision tier (operators/weaklabel.py): LF vote matrix,
+weighted-majority label model, pairwise conflict report, per-LF coverage
+analysis.
+
+Oracle parity and the empty and hot-key universes are checked for
+every registered key by tests/test_oracle_parity.py,
+tests/test_empty_inputs.py and tests/test_skewed_inputs.py.
 """
 
 from __future__ import annotations
@@ -12,28 +13,14 @@ import pytest
 
 from banking_etl_pipeline_spark.operators.weaklabel import (
     LF_NAMES,
-    queries as wl_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
 
 
 @pytest.fixture(scope="module")
 def wl():
-    return wl_queries()
-
-
-@pytest.mark.parametrize(
-    "key",
-    ["weak_label_matrix", "label_model_vote", "lf_conflict_report",
-     "lf_coverage_report"],
-)
-def test_weaklabel_oracle_parity(key, spark, sf_dir, wl):
-    spec = wl[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    return QUERIES
 
 
 def test_weaklabel_plans_scale_sane(spark, sf_dir, wl):
@@ -83,24 +70,6 @@ def test_coverage_report_bounds(spark, sf_dir, wl):
     for r in rows:
         assert r["n_filter"] + r["n_keep"] == r["n_voted"] <= r["n_docs"]
         assert r["n_conflict"] <= r["n_overlap"] <= r["n_voted"]
-
-
-def test_weaklabel_empty_universe(spark, sf_dir, wl):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
-    for key, spec in wl.items():
-        df = spec.build(spark, empty)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_weaklabel_hot_key(spark, sf_dir, wl):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in wl.items():
-        assert spec.build(spark, skew).count() >= 0, key
 
 
 def test_weaklabel_repeat_deterministic(spark, sf_dir, wl):
