@@ -36,7 +36,7 @@ from ..functions.hashing import md5_long, sql_md5_long
 from ..functions.numeric import ftrunc, sql_ftrunc
 from ..session import session_persist
 from ..spec import QuerySpec
-from .dedup import DEDUP_MINHASH_LSH_SQL, minhash_lsh_cached
+from .dedup import DEDUP_MINHASH_LSH_SQL, dedup_minhash_lsh
 from .text import tokens
 
 TOP_TERMS_K = 3
@@ -374,9 +374,9 @@ def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     its diameter. cluster_size = docs sharing it. Downstream, a curation
     pass keeps one representative (min doc_id) per cluster — exactly what
     `cluster_id == doc_id` selects. The pair stage is the session-cached
-    LSH output (`dedup.minhash_lsh_cached`) shared with `dedup_survivors`.
+    LSH output (`dedup.dedup_minhash_lsh`) shared with `dedup_survivors`.
     """
-    pairs = minhash_lsh_cached(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     labels = propagate_to_fixpoint(pairs)
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return labels.join(sizes, "label").select(

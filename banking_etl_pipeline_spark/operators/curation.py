@@ -10,8 +10,8 @@ Scale design:
   stream, the 1024-row log-likelihood-ratio dictionary broadcasts, and each
   document's score is an int64 sum of fixed-point LLRs — exact,
   order-independent, mergeable across shards.
-- dedup_incremental: probes the incoming batch's band signatures against
-  the persisted corpus band table (dedup.minhash_bands) — the production
+- dedup_incremental: probes the incoming batch's band keys against the
+  one session-persisted MinHash index (dedup.minhash_bands) — the production
   "dedup tonight's crawl against the index" shape: the index is written
   once; the probe is an equi-join on (band, band-hash) whose left side is
   batch-sized, never a corpus self-join.
@@ -41,8 +41,9 @@ from .dedup import (
     SQL_BANDS_CTES,
     _MIN_TOKENS,
     _SQL_SHINGLES,
-    minhash_bands_cached,
+    minhash_bands,
     shingle_pair_commons_cached,
+    sig_agreement,
 )
 
 # ---------------------------------------------------------------------------
@@ -159,8 +160,8 @@ INC_MOD = 5  # md5 bucket 0 of 5 → ~20% of docs play the "incoming batch"
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup an incoming batch against the existing corpus WITHOUT a corpus
     self-join — the nightly-crawl-vs-index shape every production dedup
-    runs: the corpus's banded MinHash signature table (dedup.minhash_bands,
-    persisted ≙ materialized index) is probed by the batch's band keys via
+    runs: the corpus's banded MinHash signature index (dedup.minhash_bands,
+    session-persisted ≙ materialized index) is probed by the batch's band keys via
     an equi-join on (band, band-hash); candidates are verified by exact
     signature agreement. Per incoming doc: candidate count, duplicate
     count at the MinHash threshold, and the best corpus match picked by a
@@ -168,7 +169,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort key, so ties break deterministically on the smallest corpus doc.
     Incoming docs with no band collision appear with zero counts (left
     join): the batch report is complete, not hit-only."""
-    bands = minhash_bands_cached(spark, sf_dir)
+    bands = minhash_bands(spark, sf_dir)
     incoming_flag = md5_long(
         F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))
     ) % INC_MOD == 0
@@ -185,14 +186,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band",
         "bh",
     )
-    n_match = F.aggregate(
-        F.zip_with(
-            F.col("in_sig"), F.col("corpus_sig"),
-            lambda x, y: (x == y).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    n_match = sig_agreement("in_sig", "corpus_sig")
     cand = (
         probe.join(index, ["band", "bh"])
         .select("in_doc", "corpus_doc", "in_sig", "corpus_sig")

@@ -71,23 +71,6 @@ class QualityChecker:
             for r in rules
         ]
 
-    def duplicate_count(self, df: DataFrame, key_columns: list[str]) -> int:
-        # total − distinct(keys) ≅ data_quality.py:69-75, one job
-        row = df.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.countDistinct(*key_columns).alias("distinct_keys"),
-        ).collect()[0]
-        return row["total"] - row["distinct_keys"]
-
-    def orphan_count(
-        self, fk_df: DataFrame, fk_col: str, pk_df: DataFrame, pk_col: str
-    ) -> int:
-        # distinct FK projection then anti-join ≅ data_quality.py:137-147;
-        # distinct-before-join shrinks both shuffle sides.
-        fks = fk_df.select(F.col(fk_col).alias("fk")).distinct()
-        pks = pk_df.select(F.col(pk_col).alias("fk")).distinct()
-        return fks.join(pks, "fk", "left_anti").count()
-
     def run_all_checks(self, df: DataFrame, config: QualityConfig) -> dict[str, Any]:
         exprs = [F.count(F.lit(1)).alias("total_rows")]
         exprs += self.null_check_exprs(config.required_columns)
@@ -146,9 +129,7 @@ def dq_null_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return probe.agg(
         F.count(F.lit(1)).alias("total_rows"),
-        F.sum(F.col("et").isNull().cast("long")).alias("null_count_et"),
-        F.sum(F.col("uid").isNull().cast("long")).alias("null_count_uid"),
-        F.sum(F.col("value").isNull().cast("long")).alias("null_count_value"),
+        *QualityChecker().null_check_exprs(["et", "uid", "value"]),
     )
 
 

@@ -6,13 +6,15 @@ aggressiveness curve, and a char-level gibberish signal.
 
 Scale design:
 - source_quality_report: one aggregate over documents + one distinct-doc
-  probe of the SESSION-CACHED LSH pair table (dedup.minhash_lsh_cached) —
+  probe of the SESSION-PERSISTED LSH pair table (dedup.dedup_minhash_lsh) —
   the near-dup side reuses the signature index, never recomputes it.
-- minhash_param_sweep: re-bands the SAME 16-hash signatures three ways
-  ((16,1)/(8,2)/(4,4)); candidate generation per config is a band-hash
-  equi-join, truth is the df-capped exact-Jaccard pair stage
-  (shingle_pair_commons_cached) — tuning costs three cheap joins, not
-  three signature recomputations.
+- minhash_param_sweep: re-bands the signatures of the one persisted
+  MinHash index (dedup.minhash_bands, its band-0 rows) three ways
+  ((16,1)/(8,2)/(4,4)); the (8,2) layout IS the index. Candidate
+  generation per config is a band-hash equi-join, truth is the df-capped
+  exact-Jaccard pair stage (shingle_pair_commons_cached) — tuning costs
+  three cheap joins, not three signature recomputations, and persists
+  nothing of its own.
 - dedup_threshold_curve: pure arithmetic over the cached LSH pair list —
   thresholds explode against pairs (8 rows per pair), grouped once.
 - char_entropy_quality: shuffle-free per-row closed form — per-character
@@ -27,19 +29,24 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.numeric import ftrunc, sql_ftrunc
+from ..session import session_scalar
 from ..spec import QuerySpec
 from .dedup import (
+    BAND_ROWS,
     DEDUP_MINHASH_LSH_SQL,
     MINHASH_EST_THRESHOLD,
+    N_BANDS,
     N_HASHES,
-    SQL_BANDS_CTES,
-    _signatures,
-    _exploded_shingles,
+    SQL_SIGS_CTES,
     _MIN_TOKENS,
-    minhash_lsh_cached,
-    shingle_pair_commons_cached,
+    band_keys,
+    band_pairs,
+    dedup_minhash_lsh,
+    dedup_ngram_jaccard,
+    estimated_pairs,
+    minhash_bands,
+    precision_recall,
 )
-from ..session import default_parallelism, session_persist, session_scalar
 
 # ---------------------------------------------------------------------------
 # per-source quality datasheet
@@ -52,7 +59,7 @@ GATE_MAX_MEAN_TOKEN_LEN = 12.0
 def source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source corpus datasheet: volume, language spread, a simple
     quality-gate pass count, and the near-duplicate exposure measured
-    against the session-cached MinHash-LSH pair table. `dup_rate_bp` is
+    against the session-persisted MinHash-LSH pair table. `dup_rate_bp` is
     exact integer basis points (10000·dup_docs div n_docs) so the oracle
     compares exactly. The per-source report is the artifact that decides
     which crawls enter the mix and at what weight."""
@@ -66,7 +73,7 @@ def source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((n_tok >= GATE_MIN_TOKENS)
          & (mean_len <= GATE_MAX_MEAN_TOKEN_LEN)).alias("gate"),
     )
-    pairs = minhash_lsh_cached(spark, sf_dir)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     dup_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -141,20 +148,6 @@ SWEEP_CONFIGS = [(16, 1), (8, 2), (4, 4)]
 SWEEP_PROBE_DOCS = 200
 
 
-def _sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_persist(
-        spark, f"report_sigs:{sf_dir}",
-        lambda: _signatures(
-            _exploded_shingles(
-                table(spark, sf_dir, "documents")
-                .filter(F.size(F.split(F.col("text"), " ")) >= 3)
-                .repartition(default_parallelism())
-                .select("doc_id", "text")
-            )
-        ),
-    )
-
-
 def minhash_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch tuning as a first-class operator: the same 16-hash MinHash
     signatures re-banded three ways — more bands × fewer rows = higher
@@ -165,101 +158,50 @@ def minhash_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     like ann_recall_report/minhash_eval, the evaluation itself is
     oracle-checked. Pairs are probe-anchored (doc_a < SWEEP_PROBE_DOCS,
     see the constant's note) so every config's candidate join is linear
-    in corpus size."""
-    sigs = _sigs_cached(spark, sf_dir)
-    truth = (
-        shingle_pair_commons_cached(spark, sf_dir)
-        .filter(F.col("doc_a") < SWEEP_PROBE_DOCS)
-        .select(
-            "doc_a", "doc_b",
-            (F.col("common").cast("double")
-             / (F.col("n_a") + F.col("n_b") - F.col("common"))).alias("j"),
-        )
-        .filter(F.col("j") >= MINHASH_EST_THRESHOLD)
-        .select("doc_a", "doc_b", F.lit(1).alias("t"))
-    )
-    est = (
-        F.aggregate(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"),
-                       lambda x, y: (x == y).cast("long")),
-            F.lit(0).cast("long"), lambda acc, x: acc + x,
-        ).cast("double") / float(N_HASHES)
+    in corpus size. The signatures are the persisted index's (one row per
+    doc at band 0); the index's own layout serves its config as is."""
+    index = minhash_bands(spark, sf_dir)
+    sigs = index.filter(F.col("band") == 0).select("doc_id", "sig")
+    truth = dedup_ngram_jaccard(spark, sf_dir).filter(
+        (F.col("doc_a") < SWEEP_PROBE_DOCS)
+        & (F.col("jaccard") >= MINHASH_EST_THRESHOLD)
     )
     per_config = []
     for bands, rows in SWEEP_CONFIGS:
-        # one exploded (doc_id, band, bh) per config
-        bands_df = sigs.select(
-            "doc_id", "sig",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(F.concat_ws(",", *[
-                        F.element_at(F.col("sig"), b * rows + r + 1)
-                        .cast("string")
-                        for r in range(rows)
-                    ])).alias("bh"),
-                )
-                for b in range(bands)
-            ])).alias("bk"),
-        ).select("doc_id", "sig", F.col("bk.band").alias("band"),
-                 F.col("bk.bh").alias("bh"))
-        a = bands_df.filter(F.col("doc_id") < SWEEP_PROBE_DOCS).alias("a")
-        b_ = bands_df.alias("b")
-        cand = (
-            a.join(b_, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                    F.col("a.sig").alias("sig_a"),
-                    F.col("b.sig").alias("sig_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
+        keys = (index if (bands, rows) == (N_BANDS, BAND_ROWS)
+                else band_keys(sigs, bands, rows))
+        pred = estimated_pairs(
+            band_pairs(keys.filter(F.col("doc_id") < SWEEP_PROBE_DOCS), keys)
         )
-        pred = cand.select(
-            "doc_a", "doc_b", est.alias("e")
-        ).filter(F.col("e") >= MINHASH_EST_THRESHOLD).select(
-            "doc_a", "doc_b", F.lit(1).alias("p")
-        )
-        j = truth.join(pred, ["doc_a", "doc_b"], "full")
-        agg = j.agg(
-            F.lit(bands).alias("bands"),
-            F.lit(rows).alias("rows_per_band"),
-            F.sum(F.coalesce("t", F.lit(0))).alias("n_truth"),
-            F.sum(F.coalesce("p", F.lit(0))).alias("n_pred"),
-            F.sum((F.col("t").isNotNull() & F.col("p").isNotNull())
-                  .cast("long")).alias("n_hit"),
-        )
-        per_config.append(agg)
+        per_config.append(precision_recall(
+            truth, pred,
+            F.lit(bands).alias("bands"), F.lit(rows).alias("rows_per_band"),
+        ))
     out = per_config[0]
     for c in per_config[1:]:
         out = out.unionByName(c)
-    prec = F.when(F.col("n_pred") > 0,
-                  F.col("n_hit").cast("double") / F.col("n_pred")) \
-        .otherwise(F.lit(0.0))
-    rec = F.when(F.col("n_truth") > 0,
-                 F.col("n_hit").cast("double") / F.col("n_truth")) \
-        .otherwise(F.lit(0.0))
-    return out.select(
-        "bands", "rows_per_band", "n_truth", "n_pred", "n_hit",
-        ftrunc(prec, 6).alias("precision"),
-        ftrunc(rec, 6).alias("recall"),
-    )
+    return out
 
 
-def _sweep_config_sql(bands: int, rows: int) -> str:
+def _sweep_band_sql(bands: int, rows: int) -> str:
+    """DuckDB band rows (doc_id, sig, band, bh) of one sweep layout over
+    the `sigs` CTE."""
     band_exprs = []
     for b in range(bands):
         parts = " || ',' || ".join(
             f"CAST(sig[{b * rows + r + 1}] AS VARCHAR)" for r in range(rows)
         )
         band_exprs.append(f"md5({parts}) ")
-    bands_sql = " UNION ALL ".join(
+    return " UNION ALL ".join(
         f"SELECT doc_id, sig, {b} AS band, {band_exprs[b]} AS bh FROM sigs"
         for b in range(bands)
     )
+
+
+def _sweep_config_sql(bands: int, rows: int) -> str:
     return f"""
 sel_{bands}_{rows} AS (
-  WITH bl AS ({bands_sql}),
+  WITH bl AS ({_sweep_band_sql(bands, rows)}),
   cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
            a.sig AS sig_a, b.sig AS sig_b
@@ -309,12 +251,7 @@ truth AS (
 
 
 def _sweep_sql() -> str:
-    from .dedup import (
-        JACCARD_MAX_DF,
-        _SQL_BASE_HASHES,
-        _SQL_SHINGLES,
-        _SQL_SIGNATURE,
-    )
+    from .dedup import JACCARD_MAX_DF, _SQL_SHINGLES
 
     truth = _SWEEP_TRUTH_SQL.format(
         shingles=_SQL_SHINGLES.format(x="text"), max_df=JACCARD_MAX_DF,
@@ -325,12 +262,7 @@ def _sweep_sql() -> str:
         f"SELECT * FROM sel_{b}_{r}" for b, r in SWEEP_CONFIGS
     )
     return f"""
-WITH t AS (
-  SELECT doc_id, {_SQL_SHINGLES.format(x='text')} AS sh
-  FROM documents WHERE {_MIN_TOKENS}
-),
-hs AS (SELECT doc_id, {_SQL_BASE_HASHES} AS hs FROM t),
-sigs AS (SELECT doc_id, {_SQL_SIGNATURE} AS sig FROM hs),
+WITH {SQL_SIGS_CTES},
 {truth},
 {configs}
 SELECT bands, rows_per_band, n_truth, n_pred, n_hit,
@@ -355,7 +287,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     draws before fixing the near-dup threshold — one pass over the
     session-cached LSH pair list, thresholds as an exploded literal
     array (integer percent values, so grouping keys are exact)."""
-    pairs = minhash_lsh_cached(spark, sf_dir).select(
+    pairs = dedup_minhash_lsh(spark, sf_dir).select(
         "doc_a", "doc_b",
         F.floor(F.col("est_jaccard") * 100.0 + 0.5).cast("long").alias("e100"),
     )

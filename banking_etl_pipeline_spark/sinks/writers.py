@@ -26,6 +26,7 @@ automatically with partition predicates).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -116,9 +117,11 @@ class ParquetWarehouse:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
+        self._recover(table)
         return os.path.isdir(self.path(table))
 
     def read(self, table: str) -> DataFrame:
+        self._recover(table)
         return self.spark.read.parquet(self.path(table))
 
     def truncate_and_load(self, df: DataFrame, table: str) -> None:
@@ -144,9 +147,26 @@ class ParquetWarehouse:
     def _is_delta(self, table: str) -> bool:
         return os.path.isdir(os.path.join(self.path(table), "_delta_log"))
 
+    def _recover(self, table: str) -> None:
+        """Undo a swap a crash cut in half. `_atomic_write` moves the live
+        table to `<stage>/old` before it moves the new data in; a crash
+        between the two renames leaves no table directory, and the next
+        upsert would take the first-load path and keep only its own rows.
+        The new data never went live, so the old table goes back."""
+        final = self.path(table)
+        if not os.path.isdir(final):
+            olds = glob.glob(os.path.join(self.root, f"_{table}_stage_*", "old"))
+            if olds:
+                os.rename(max(olds, key=os.path.getmtime), final)
+
     def _atomic_write(self, df: DataFrame, table: str) -> None:
         """Write to a tmp dir, then swap directories. The merged plan reads
-        the live table, so it must fully materialize before the swap."""
+        the live table, so it must fully materialize before the swap.
+        Stage directories of crashed writes are deleted first (only a
+        writer does this, so a reader never deletes a live stage)."""
+        self._recover(table)
+        for leftover in glob.glob(os.path.join(self.root, f"_{table}_stage_*")):
+            shutil.rmtree(leftover, ignore_errors=True)
         tmp = tempfile.mkdtemp(dir=self.root, prefix=f"_{table}_stage_")
         stage = os.path.join(tmp, "data")
         df.write.mode("overwrite").parquet(stage)

@@ -10,6 +10,9 @@ equivalence check of the format reader, not a mock.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,13 +35,37 @@ def _cache_dir(sf_dir: str, kind: str) -> str:
     return os.path.join(_CACHE_ROOT, tag, kind)
 
 
+def _materialize(path: str, write: Callable[[str], None],
+                 marker: str = "_SUCCESS") -> str:
+    """Write the cache directory `path` once, safely under concurrent runs:
+    `write(tmp)` fills a unique sibling temp directory, which is then
+    renamed into place, so a reader only ever sees a complete directory.
+    When another writer's rename won, this copy is discarded. `marker`
+    (relative to `path`) marks a complete directory."""
+    done = os.path.join(path, marker)
+    if not os.path.exists(done):
+        parent = os.path.dirname(path)
+        os.makedirs(parent, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=parent, prefix=f".{os.path.basename(path)}-")
+        try:
+            write(tmp)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                if not os.path.exists(done):  # not a winner: a partial dir
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round-trip of `region` (int/string columns only — CSV-safe)."""
-    path = _cache_dir(sf_dir, "region_csv")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        table(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").option(
-            "header", "true"
-        ).csv(path)
+    path = _materialize(
+        _cache_dir(sf_dir, "region_csv"),
+        lambda tmp: table(spark, sf_dir, "region").coalesce(1).write.mode(
+            "overwrite").option("header", "true").csv(tmp),
+    )
     return read_csv(
         spark, path, header=True, schema="r_regionkey int, r_name string"
     )
@@ -56,11 +83,11 @@ SCAN_PARQUET_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
 
 def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-line scan of the documents corpus (one line per doc)."""
-    path = _cache_dir(sf_dir, "documents_txt")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        table(spark, sf_dir, "documents").select("text").coalesce(1).write.mode(
-            "overwrite"
-        ).text(path)
+    path = _materialize(
+        _cache_dir(sf_dir, "documents_txt"),
+        lambda tmp: table(spark, sf_dir, "documents").select("text").coalesce(
+            1).write.mode("overwrite").text(tmp),
+    )
     return read_text(spark, path)
 
 
@@ -70,9 +97,11 @@ SCAN_TEXT_SQL = "SELECT text AS value FROM documents"
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines round-trip of `nation` with an explicit schema (no
     inference scan)."""
-    path = _cache_dir(sf_dir, "nation_json")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").json(path)
+    path = _materialize(
+        _cache_dir(sf_dir, "nation_json"),
+        lambda tmp: table(spark, sf_dir, "nation").coalesce(1).write.mode(
+            "overwrite").json(tmp),
+    )
     return read_json(
         spark, path, schema="n_nationkey long, n_name string, n_regionkey long"
     ).select("n_nationkey", "n_name", "n_regionkey")
@@ -84,9 +113,11 @@ SCAN_JSON_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC round-trip of `region` — same columnar pushdown/pruning path as
     parquet, second columnar format for the source surface."""
-    path = _cache_dir(sf_dir, "region_orc")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        table(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").orc(path)
+    path = _materialize(
+        _cache_dir(sf_dir, "region_orc"),
+        lambda tmp: table(spark, sf_dir, "region").coalesce(1).write.mode(
+            "overwrite").orc(tmp),
+    )
     return read_orc(spark, path)
 
 
@@ -101,19 +132,22 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior the reference's inferSchema ingest implies but never pins
     down (SURVEY.md §1 "schema evolution is unmanaged"). The oracle is
     the equivalent typed UNION over the original table."""
-    path = _cache_dir(sf_dir, "customer_evo")
     c = table(spark, sf_dir, "customer")
     from pyspark.sql import functions as F
 
     from ..functions.numeric import cents
 
-    if not os.path.exists(os.path.join(path, "gen2", "_SUCCESS")):
+    def write_generations(tmp: str) -> None:
         c.filter("c_custkey % 2 = 0").select("c_custkey", "c_name").write.mode(
             "overwrite"
-        ).parquet(os.path.join(path, "gen1"))
+        ).parquet(os.path.join(tmp, "gen1"))
         c.filter("c_custkey % 2 = 1").select(
             "c_custkey", "c_name", cents(F.col("c_acctbal")).alias("bal_c")
-        ).write.mode("overwrite").parquet(os.path.join(path, "gen2"))
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "gen2"))
+
+    # both generations are one unit: gen2's marker completes the directory
+    path = _materialize(_cache_dir(sf_dir, "customer_evo"), write_generations,
+                        os.path.join("gen2", "_SUCCESS"))
     return read_parquet_evolved(
         spark, os.path.join(path, "gen1"), os.path.join(path, "gen2")
     ).select("c_custkey", "c_name", "bal_c")

@@ -22,6 +22,7 @@ from banking_etl_pipeline_spark.operators.dedup import (
     QUERIES as DEDUP_QUERIES,
     dedup_band_bits,
 )
+from banking_etl_pipeline_spark.operators.reports import SWEEP_CONFIGS
 from tests.oracle_compare import compare, duck_connection
 
 
@@ -385,3 +386,38 @@ def test_band_relation_sql_parity(spark, sf_dir, n_bands, band_bits):
         f" SELECT vec_id, band, sig FROM {_sql_sigs(n_bands, band_bits)} s"
     ).fetchall())
     assert got == want
+
+
+@pytest.mark.parametrize("bands,rows", SWEEP_CONFIGS)
+def test_minhash_band_relation_sql_parity(spark, bands, rows):
+    """The MinHash band rows the banding sweep reads, row-for-row against
+    the oracles' band CTEs at sf0.001: the persisted index for its own
+    (8, 2) layout (also against `SQL_BANDS_CTES`), the index's band-0
+    signatures re-banded for the other two."""
+    from banking_etl_pipeline_spark.operators.dedup import (
+        BAND_ROWS,
+        N_BANDS,
+        SQL_BANDS_CTES,
+        SQL_SIGS_CTES,
+        band_keys,
+        minhash_bands,
+    )
+    from banking_etl_pipeline_spark.operators.reports import _sweep_band_sql
+    from tests.conftest import SF_SMALL
+
+    index = minhash_bands(spark, SF_SMALL)
+    is_index = (bands, rows) == (N_BANDS, BAND_ROWS)
+    keys = index if is_index else band_keys(
+        index.filter("band = 0").select("doc_id", "sig"), bands, rows)
+    got = sorted(tuple(r) for r in
+                 keys.select("doc_id", "band", "bh").collect())
+    con = duck_connection(SF_SMALL)
+    want = sorted(con.execute(
+        f"WITH {SQL_SIGS_CTES} SELECT doc_id, band, bh"
+        f" FROM ({_sweep_band_sql(bands, rows)}) bl"
+    ).fetchall())
+    assert got and got == want
+    if is_index:
+        assert got == sorted(con.execute(
+            f"WITH {SQL_BANDS_CTES} SELECT doc_id, band, bh FROM bands"
+        ).fetchall())

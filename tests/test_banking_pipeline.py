@@ -282,6 +282,41 @@ def test_warehouse_staged_upsert_roundtrip(spark, tmp_path):
     assert {r.k for r in wh.read("dim").collect()} == {"K2", "K3"}
 
 
+def test_warehouse_upsert_survives_crash_between_swap_renames(
+        spark, tmp_path, monkeypatch):
+    """A crash after the live table moved aside but before the new data
+    moved in must not cost the table: the restarted upsert sees base ∪ day,
+    and no stage directory is left behind."""
+    import os
+
+    root = str(tmp_path / "wh")
+    wh = ParquetWarehouse(spark, root)
+    base = spark.createDataFrame([("K1", 1), ("K2", 2)], "k string, v int")
+    wh.load_with_staging(base, "dim", ["k"])
+    day = spark.createDataFrame([("K2", 20), ("K3", 30)], "k string, v int")
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second_rename(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("crash between the two renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    with pytest.raises(OSError):
+        wh.load_with_staging(day, "dim", ["k"])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.isdir(wh.path("dim"))  # the crash window itself
+
+    restarted = ParquetWarehouse(spark, root)
+    restarted.load_with_staging(day, "dim", ["k"])
+    got = {r.k: r.v for r in restarted.read("dim").collect()}
+    assert got == {"K1": 1, "K2": 20, "K3": 30}
+    assert sorted(os.listdir(root)) == ["dim"]
+
+
 # ---------------------------------------------------------------------------
 # quality gate + full pipeline e2e
 # ---------------------------------------------------------------------------

@@ -181,3 +181,42 @@ def test_bad_aqe_env_value_fails_naming_the_variable(monkeypatch, name, bad,
         get_spark(app_name="tests")
     monkeypatch.setenv(name, good)
     assert _env_conf(name, "") == good
+
+
+def test_scan_cache_concurrent_materialize_leaves_one_complete_dir(
+        spark, tmp_path):
+    """Two writers race to fill the same absent cache directory: both write
+    before either renames (barrier), exactly one copy lands, no temp
+    directory is left, and both callers read the same rows."""
+    import os
+    import threading
+
+    from banking_etl_pipeline_spark.sources.scan_queries import _materialize
+
+    df = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)],
+                               "name string, v int")
+    path = str(tmp_path / "cache" / "rows_csv")
+    both_written = threading.Barrier(2)
+    results, errors = {}, []
+
+    def write(tmp):
+        df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+        both_written.wait(timeout=120)
+
+    def run(name):
+        try:
+            got = _materialize(path, write)
+            results[name] = sorted(map(tuple, read_csv(
+                spark, got, schema="name string, v int").collect()))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in ("p", "q")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert os.listdir(tmp_path / "cache") == ["rows_csv"]
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert results["p"] == results["q"] == [("a", 1), ("b", 2), ("c", 3)]

@@ -55,3 +55,58 @@ def test_report_repeat_deterministic(spark, sf_dir, reports):
                 tuple(_norm(r[c]) for c in sorted(r.asDict())) for r in rows
             ))
         assert sets[0] == sets[1], f"{key}: nondeterministic across builds"
+
+
+_PERSIST_SCRIPT = r"""
+import sys
+sys.path.insert(0, "@REPO@")
+from banking_etl_pipeline_spark.operators.dedup import dedup_ngram_jaccard
+from banking_etl_pipeline_spark.registry import all_queries
+from banking_etl_pipeline_spark.session import get_spark
+
+spark = get_spark(app_name="sweep-persist")
+sf = "@SF@"
+qs = all_queries()
+
+
+def run(df):
+    df.write.format("noop").mode("overwrite").save()
+
+
+def persisted():
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+run(qs["dedup_minhash_lsh"].build(spark, sf))
+# the sweep's truth tier is the exact-Jaccard pair stage, persisted by its
+# own keys; built first so only what the sweep itself adds is counted
+run(dedup_ngram_jaccard(spark, sf))
+before = persisted()
+run(qs["minhash_param_sweep"].build(spark, sf))
+print("persisted", before, persisted())
+"""
+
+
+def test_minhash_param_sweep_adds_no_persisted_relation():
+    """In a fresh app, after `dedup_minhash_lsh` (and the exact-Jaccard
+    truth tier) ran, the banding sweep reads the one persisted MinHash
+    index and persists nothing of its own."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_SMALL
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _PERSIST_SCRIPT.replace("@REPO@", repo)
+         .replace("@SF@", SF_SMALL)],
+        capture_output=True, text=True, timeout=420, cwd=repo,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2",
+             "SPARK_GRAFT_DRIVER_MEM": "2g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = [ln for ln in proc.stdout.splitlines()
+            if ln.startswith("persisted ")][-1]
+    _, before, after = line.split()
+    assert int(before) > 0 and int(after) == int(before), line
