@@ -344,11 +344,13 @@ def sig_agreement(a: str, b: str) -> Column:
     )
 
 
-def band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, sig_a, sig_b): each distinct pair doc_a < doc_b whose
-    band tables share a (band, bh) key — the LSH candidate join. `left` is
-    the index itself or a filtered view of it (the sweep's probe docs)."""
+def lsh_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard): each distinct pair doc_a < doc_b whose
+    band tables share a (band, bh) key — the LSH candidate join — kept at
+    est_jaccard >= MINHASH_EST_THRESHOLD. `left` is the band table itself
+    or a filtered view of it (the sweep's probe docs)."""
     a, b = left.alias("a"), right.alias("b")
+    est = sig_agreement("sig_a", "sig_b").cast("double") / float(N_HASHES)
     return (
         a.join(
             b,
@@ -363,15 +365,7 @@ def band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
             F.col("b.sig").alias("sig_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
-def estimated_pairs(cand: DataFrame) -> DataFrame:
-    """`band_pairs` candidates → (doc_a, doc_b, est_jaccard), verified at
-    est_jaccard >= MINHASH_EST_THRESHOLD."""
-    est = sig_agreement("sig_a", "sig_b").cast("double") / float(N_HASHES)
-    return (
-        cand.select("doc_a", "doc_b", est.alias("est_jaccard"))
+        .select("doc_a", "doc_b", est.alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= MINHASH_EST_THRESHOLD)
     )
 
@@ -385,7 +379,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     once" step of a real dedup pipeline."""
     def build() -> DataFrame:
         bands = minhash_bands(spark, sf_dir)
-        return estimated_pairs(band_pairs(bands, bands))
+        return lsh_pairs(bands, bands)
 
     return session_persist(spark, f"minhash_lsh:{sf_dir}", build)
 

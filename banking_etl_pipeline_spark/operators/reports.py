@@ -10,7 +10,8 @@ Scale design:
   the near-dup side reuses the signature index, never recomputes it.
 - minhash_param_sweep: re-bands the signatures of the one persisted
   MinHash index (dedup.minhash_bands, its band-0 rows) three ways
-  ((16,1)/(8,2)/(4,4)); the (8,2) layout IS the index. Candidate
+  ((16,1)/(8,2)/(4,4)) with dedup.band_keys, the function that builds
+  the index. Candidate
   generation per config is a band-hash equi-join, truth is the df-capped
   exact-Jaccard pair stage (shingle_pair_commons_cached) — tuning costs
   three cheap joins, not three signature recomputations, and persists
@@ -40,10 +41,9 @@ from .dedup import (
     SQL_SIGS_CTES,
     _MIN_TOKENS,
     band_keys,
-    band_pairs,
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
-    estimated_pairs,
+    lsh_pairs,
     minhash_bands,
     precision_recall,
 )
@@ -159,20 +159,17 @@ def minhash_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked. Pairs are probe-anchored (doc_a < SWEEP_PROBE_DOCS,
     see the constant's note) so every config's candidate join is linear
     in corpus size. The signatures are the persisted index's (one row per
-    doc at band 0); the index's own layout serves its config as is."""
-    index = minhash_bands(spark, sf_dir)
-    sigs = index.filter(F.col("band") == 0).select("doc_id", "sig")
+    doc at band 0), re-banded per config."""
+    sigs = minhash_bands(spark, sf_dir).filter(F.col("band") == 0).select(
+        "doc_id", "sig")
     truth = dedup_ngram_jaccard(spark, sf_dir).filter(
         (F.col("doc_a") < SWEEP_PROBE_DOCS)
         & (F.col("jaccard") >= MINHASH_EST_THRESHOLD)
     )
     per_config = []
     for bands, rows in SWEEP_CONFIGS:
-        keys = (index if (bands, rows) == (N_BANDS, BAND_ROWS)
-                else band_keys(sigs, bands, rows))
-        pred = estimated_pairs(
-            band_pairs(keys.filter(F.col("doc_id") < SWEEP_PROBE_DOCS), keys)
-        )
+        keys = band_keys(sigs, bands, rows)
+        pred = lsh_pairs(keys.filter(F.col("doc_id") < SWEEP_PROBE_DOCS), keys)
         per_config.append(precision_recall(
             truth, pred,
             F.lit(bands).alias("bands"), F.lit(rows).alias("rows_per_band"),

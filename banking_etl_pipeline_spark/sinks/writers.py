@@ -106,7 +106,11 @@ class ParquetWarehouse:
     Redshift staging-table flow (readshift_loader.py:68-149) on columnar
     storage. Delta `MERGE INTO` when available; otherwise merge + tmp-dir
     swap (the swap is the non-transactional step plain parquet can't avoid —
-    documented reason Delta is the preferred format at scale)."""
+    documented reason Delta is the preferred format at scale).
+
+    One process per warehouse root: `exists` and `read` also undo a swap a
+    crash cut in half (`_recover`), so a reader in a second process could
+    move a live writer's old table back and make that write fail."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark

@@ -9,6 +9,7 @@ equivalence check of the format reader, not a mock.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 import tempfile
@@ -52,11 +53,30 @@ def _materialize(path: str, write: Callable[[str], None],
             try:
                 os.rename(tmp, path)
             except OSError:
-                if not os.path.exists(done):  # not a winner: a partial dir
-                    raise
+                if not os.path.exists(done):
+                    _replace_incomplete(path, tmp, done)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     return path
+
+
+def _replace_incomplete(path: str, tmp: str, done: str) -> None:
+    """`path` exists without its marker: a killed writer (or an older
+    in-place overwrite) left it. Only complete directories are renamed in,
+    so it is no writer's live output: move it aside and rename `tmp` in.
+    The lock keeps two repairers from moving aside each other's result."""
+    with open(path + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.exists(done):
+            return
+        stale = tmp + ".stale"
+        os.rename(path, stale)
+        shutil.rmtree(stale, ignore_errors=True)
+        try:
+            os.rename(tmp, path)
+        except OSError:  # an unlocked writer's rename landed first
+            if not os.path.exists(done):
+                raise
 
 
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -390,14 +390,10 @@ def test_band_relation_sql_parity(spark, sf_dir, n_bands, band_bits):
 
 @pytest.mark.parametrize("bands,rows", SWEEP_CONFIGS)
 def test_minhash_band_relation_sql_parity(spark, bands, rows):
-    """The MinHash band rows the banding sweep reads, row-for-row against
-    the oracles' band CTEs at sf0.001: the persisted index for its own
-    (8, 2) layout (also against `SQL_BANDS_CTES`), the index's band-0
-    signatures re-banded for the other two."""
+    """The MinHash band rows the banding sweep reads — the index's band-0
+    signatures re-banded per layout — row-for-row against the sweep
+    oracle's band CTE at sf0.001."""
     from banking_etl_pipeline_spark.operators.dedup import (
-        BAND_ROWS,
-        N_BANDS,
-        SQL_BANDS_CTES,
         SQL_SIGS_CTES,
         band_keys,
         minhash_bands,
@@ -405,19 +401,29 @@ def test_minhash_band_relation_sql_parity(spark, bands, rows):
     from banking_etl_pipeline_spark.operators.reports import _sweep_band_sql
     from tests.conftest import SF_SMALL
 
-    index = minhash_bands(spark, SF_SMALL)
-    is_index = (bands, rows) == (N_BANDS, BAND_ROWS)
-    keys = index if is_index else band_keys(
-        index.filter("band = 0").select("doc_id", "sig"), bands, rows)
-    got = sorted(tuple(r) for r in
-                 keys.select("doc_id", "band", "bh").collect())
-    con = duck_connection(SF_SMALL)
-    want = sorted(con.execute(
+    sigs = minhash_bands(spark, SF_SMALL).filter("band = 0").select(
+        "doc_id", "sig")
+    got = sorted(tuple(r) for r in band_keys(sigs, bands, rows).select(
+        "doc_id", "band", "bh").collect())
+    want = sorted(duck_connection(SF_SMALL).execute(
         f"WITH {SQL_SIGS_CTES} SELECT doc_id, band, bh"
         f" FROM ({_sweep_band_sql(bands, rows)}) bl"
     ).fetchall())
     assert got and got == want
-    if is_index:
-        assert got == sorted(con.execute(
-            f"WITH {SQL_BANDS_CTES} SELECT doc_id, band, bh FROM bands"
-        ).fetchall())
+
+
+def test_minhash_index_sql_parity(spark):
+    """The persisted MinHash index, row-for-row against the LSH oracles'
+    `bands` CTE at sf0.001."""
+    from banking_etl_pipeline_spark.operators.dedup import (
+        SQL_BANDS_CTES,
+        minhash_bands,
+    )
+    from tests.conftest import SF_SMALL
+
+    got = sorted(tuple(r) for r in minhash_bands(spark, SF_SMALL).select(
+        "doc_id", "band", "bh").collect())
+    want = sorted(duck_connection(SF_SMALL).execute(
+        f"WITH {SQL_BANDS_CTES} SELECT doc_id, band, bh FROM bands"
+    ).fetchall())
+    assert got and got == want

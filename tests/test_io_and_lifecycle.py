@@ -220,3 +220,26 @@ def test_scan_cache_concurrent_materialize_leaves_one_complete_dir(
     assert os.listdir(tmp_path / "cache") == ["rows_csv"]
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
     assert results["p"] == results["q"] == [("a", 1), ("b", 2), ("c", 3)]
+
+
+def test_scan_cache_materialize_replaces_incomplete_dir(spark, tmp_path):
+    """A cache directory a killed writer left without its marker is
+    replaced by a complete copy instead of failing every later scan."""
+    import os
+
+    from banking_etl_pipeline_spark.sources.scan_queries import _materialize
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "name string, v int")
+    path = tmp_path / "cache" / "rows_csv"
+    path.mkdir(parents=True)
+    (path / "part-00000-partial.csv").write_text("a,1\n")
+
+    got = _materialize(str(path), lambda tmp: df.coalesce(1).write.mode(
+        "overwrite").option("header", "true").csv(tmp))
+    assert os.path.exists(os.path.join(got, "_SUCCESS"))
+    assert not (path / "part-00000-partial.csv").exists()
+    assert sorted(map(tuple, read_csv(
+        spark, got, schema="name string, v int").collect())) == [
+            ("a", 1), ("b", 2)]
+    assert sorted(os.listdir(tmp_path / "cache")) == [
+        "rows_csv", "rows_csv.lock"]
